@@ -59,7 +59,7 @@ def bpe_train(
     `replace` projections over it.  Per-iteration caching (the previous
     shape) paid one materialization job + a storage write per merge and
     was measured wall 1.29x / JVM-CPU 1.27x worse at the bench's 3 merges
-    (tools/ab_code.py vs tools/r14_variants.py::bpe_train_merges_v2).
+    (tools/ab_code.py A/B, OPTIMIZATION_r14.md §8).
     Recomputing the chain costs O(k²/2) replace passes across k merges —
     fine for small k; every `_LINEAGE_STRIDE` merges the chain is cut with
     a cached barrier so large-k training stays O(k·stride) work with a

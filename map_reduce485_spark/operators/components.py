@@ -30,7 +30,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from map_reduce485_spark.queries._util import cache_scoped
+from map_reduce485_spark.queries._util import (
+    cache_scoped,
+    checkpoint_scoped,
+    release_checkpoint,
+)
 
 
 def star_components(
@@ -89,7 +93,14 @@ def star_components(
         )
         # small-star on the oriented output: neighbors of u are all < u
         m_small = large.groupBy(F.col("hi").alias("u")).agg(F.min("lo").alias("m"))
-        stepped = (
+        # Lineage MUST be truncated every round: the round's plan references
+        # the previous round's frame ~8x (sym is edges x2; large joins sym
+        # with an agg of sym; stepped joins large with an agg of large), so
+        # an un-truncated logical tree grows 8^rounds — Catalyst analysis
+        # hangs long before any task runs (cache does not help; cached-plan
+        # substitution happens after analysis).  checkpoint_scoped
+        # materializes the round's edge list and makes it the new leaf.
+        stepped = checkpoint_scoped(
             large.join(m_small, large.hi == F.col("u"))
             .select(
                 # (v, m) for each smaller neighbor v, plus (u, m) for u itself
@@ -103,17 +114,6 @@ def star_components(
             .select("e.hi", "e.lo")
             .filter(F.col("hi") != F.col("lo"))
             .distinct()
-            # Lineage MUST be truncated every round: the round's plan
-            # references the previous round's frame ~8x (sym is edges x2;
-            # large joins sym with an agg of sym; stepped joins large with an
-            # agg of large), so an un-truncated logical tree grows 8^rounds —
-            # Catalyst analysis hangs long before any task runs (cache does
-            # not help; cached-plan substitution happens after analysis).
-            # localCheckpoint materializes the round's edge list and makes it
-            # the new leaf; on a real cluster with lineage-loss concerns use
-            # checkpoint() to durable storage instead.  Spark's ContextCleaner
-            # unpersists each round's blocks once the frame goes unreferenced.
-            .localCheckpoint(eager=True)
         )
         # fixpoint test: both sets are distinct, so equal counts plus an
         # empty one-way difference prove set equality (2 actions on cached
@@ -122,6 +122,8 @@ def star_components(
             stepped.count() == edges.count()
             and stepped.subtract(edges).limit(1).count() == 0
         )
+        # the previous generation is fully consumed — free its storage now
+        release_checkpoint(edges)
         edges = stepped
         if same:
             break

@@ -85,16 +85,6 @@ def bench_queries() -> dict[str, QuerySpec]:
 
 _LOADED = False
 
-# Gate-execution order, query-level (the driver iterates the registry dict
-# and checks ~50 queries per round).  Round-4 rotation: the hand lists are
-# EMPTY — the automatic least-recently-verified tail does all the ordering
-# (never-driver-checked queries lead, then oldest-round greens), which is
-# exactly the round-3 verdict's prescription.  Use the lists only for true
-# "fix awaiting driver re-witness" entries that must jump the LRV order.
-_GATE_FIRST: list[str] = []
-
-_GATE_SECOND: list[str] = []
-
 
 def _last_verified_round() -> dict[str, int]:
     """Per-query latest driver-checked round, read from the CORRECTNESS_r*.json
@@ -123,13 +113,10 @@ def _last_verified_round() -> dict[str, int]:
 
 def _load_all() -> None:
     """Import every query module exactly once (registration side effects),
-    then reorder the registry to the round's gate order: `_GATE_FIRST`
-    (fixes awaiting a driver re-witness + this round's hand-tuned 50),
-    `_GATE_SECOND`, then everything else least-recently-driver-verified
-    first (never-checked queries lead), ties in registration order.  The
-    automatic tail self-heals across rounds — a new query or a stale one
-    floats forward without editing the lists; next round the manual lists
-    shrink to just the fix-re-witness entries."""
+    then reorder the registry to the gate order (the driver iterates the
+    registry dict and checks a slice per round): least-recently-driver-
+    verified first (never-checked queries lead), ties in registration
+    order — a new or stale query floats forward on its own."""
     global _LOADED
     if _LOADED:
         return
@@ -152,17 +139,11 @@ def _load_all() -> None:
         graph,
     )
 
-    ordered: dict[str, QuerySpec] = {}
-    for name in [*_GATE_FIRST, *_GATE_SECOND]:
-        if name in REGISTRY:
-            ordered[name] = REGISTRY[name]
     last = _last_verified_round()
     reg_index = {name: i for i, name in enumerate(REGISTRY)}
-    rest = [n for n in REGISTRY if n not in ordered]
-    rest.sort(key=lambda n: (last.get(n, -1), reg_index[n]))
-    for name in rest:
-        ordered[name] = REGISTRY[name]
+    ordered = sorted(REGISTRY, key=lambda n: (last.get(n, -1), reg_index[n]))
+    specs = {name: REGISTRY[name] for name in ordered}
     REGISTRY.clear()
-    REGISTRY.update(ordered)
+    REGISTRY.update(specs)
 
     _LOADED = True

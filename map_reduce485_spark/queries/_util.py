@@ -103,21 +103,12 @@ def checkpoint_scoped(df: DataFrame) -> DataFrame:
     :func:`release_scoped_caches`, and callers that drop a generation
     eagerly (two-generation loops) can call the returned frame's
     ``rdd``-level release via :func:`release_checkpoint`."""
-    sc = df.sparkSession.sparkContext
-    try:
-        before = {int(i) for i in sc._jsc.getPersistentRDDs().keySet().toArray()}
-    except Exception:
-        before = None
     out = df.localCheckpoint(eager=True)
-    if before is not None:
-        try:
-            after = {int(i) for i in sc._jsc.getPersistentRDDs().keySet().toArray()}
-            new_ids = sorted(after - before)
-            for rid in new_ids:
-                _SCOPED_CHECKPOINTS.append((sc, rid))
-            out._mr485_ckpt_ids = new_ids  # for eager two-generation release
-        except Exception:
-            pass
+    # the checkpointed plan is a LogicalRDD over exactly the persisted RDD
+    # this call materialized — never an RDD another thread persisted
+    rid = int(out._jdf.logicalPlan().rdd().id())
+    _SCOPED_CHECKPOINTS.append((df.sparkSession.sparkContext, rid))
+    out._mr485_ckpt_ids = [rid]  # for eager two-generation release
     return out
 
 

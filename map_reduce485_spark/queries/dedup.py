@@ -26,9 +26,18 @@ are the north-star extensions mandated by BASELINE.json.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from map_reduce485_spark.operators.minhash import (
+    BANDS as _BANDS,
+    N_PERM as _N_PERM,
+    band_digest_cols,
+    band_rows,
+    candidate_pairs,
+    perm_hash,
+    signature_cols,
+)
 from map_reduce485_spark.queries import query
 from map_reduce485_spark.queries._util import T, cache_scoped, checkpoint_scoped
 
@@ -195,9 +204,6 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 # MinHash + LSH
 # ---------------------------------------------------------------------------
 
-_N_PERM = 8  # 8 hash permutations → 2 bands of 4 rows
-_BANDS = ((0, 1, 2, 3), (4, 5, 6, 7))
-
 _MINHASH_SIG_COLS_SQL = ",\n         ".join(
     f"MIN(md5(shingle || '#{j}')) AS h{j}" for j in range(_N_PERM)
 )
@@ -269,10 +275,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     (docs,) = T(spark, sf_dir, "documents")
     sh = _spark_shingles(docs)
     sig = sh.groupBy("doc_id").agg(
-        *[
-            F.min(F.md5(F.concat(F.col("shingle"), F.lit(f"#{j}")))).alias(f"h{j}")
-            for j in range(_N_PERM)
-        ],
+        *signature_cols(),
         F.array_sort(F.collect_list(F.xxhash64("shingle"))).alias("sh_arr"),
         F.count("*").alias("n"),
     )
@@ -281,15 +284,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # map-side filter — no global `distinct` shuffle over the candidate-pair
     # stream (the same first-match-banding move as `dedup_simhash_banded`;
     # exactly-once emission is what lets the verify join count safely)
-    digests = sig.select(
-        "doc_id",
-        "sh_arr",
-        "n",
-        *[
-            F.md5(F.concat(*[F.col(f"h{j}") for j in band])).alias(f"d{bi}")
-            for bi, band in enumerate(_BANDS)
-        ],
-    )
+    digests = sig.select("doc_id", "sh_arr", "n", *band_digest_cols())
     n_b = len(_BANDS)
     # Round-14 optimization (guide §2.4 — don't re-derive shared subtrees):
     # band rows come from ONE `inline` over an array of (band_id, band,
@@ -301,7 +296,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # A/B (tools/ab_code.py, sf0.1): CPU 0.69x warm / 0.62x cold, wall
     # 0.92x/0.93x; the cache_scoped alternative bought wall 0.54x but paid
     # CPU 2.46x building/reading the array-typed InMemoryRelation —
-    # rejected (tools/r14_variants.py::dedup_minhash_lsh_v2).
+    # rejected (OPTIMIZATION_r14.md §1).
     # Band bi's first-match filter only reads PRIOR digests d0..d(bi-1)
     # (and the last digest never at all), so later slots ride as NULLs —
     # one null bit each in the band shuffle instead of a 32-char hex
@@ -1319,69 +1314,77 @@ def minhash_estimate_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate set."""
     (docs,) = T(spark, sf_dir, "documents")
     sh = cache_scoped(_spark_shingles(docs))
-    sig = sh.groupBy("doc_id").agg(
-        *[
-            F.min(F.md5(F.concat(F.col("shingle"), F.lit(f"#{j}")))).alias(f"h{j}")
-            for j in range(_N_PERM)
-        ]
+    sig = sh.groupBy("doc_id").agg(*signature_cols(), F.count("*").alias("n"))
+    bands = band_rows(sig.select("doc_id", *band_digest_cols()), "doc_id")
+    cand = candidate_pairs(bands)
+    return _scored_pairs(cand, sh, sig).select(
+        "a_id",
+        "b_id",
+        (F.col("matches") / float(_N_PERM)).alias("est_jaccard"),
+        _exact_jaccard().alias("exact_jaccard"),
     )
-    bands = None
-    for bi, band in enumerate(_BANDS):
-        b = sig.select(
-            "doc_id",
-            F.lit(bi).alias("band_id"),
-            F.md5(F.concat(*[F.col(f"h{j}") for j in band])).alias("band"),
-        )
-        bands = b if bands is None else bands.unionAll(b)
-    cand = (
-        bands.alias("a")
-        .join(
-            bands.alias("b"),
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("a_id"), F.col("b.doc_id").alias("b_id"))
-        .distinct()
-    )
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
+
+
+def _scored_pairs(pairs: DataFrame, sh: DataFrame, sig: DataFrame) -> DataFrame:
+    """``pairs`` (a_id, b_id) with both docs' shingle counts (na, nb),
+    their shared-shingle count ``it`` (0 when they share none) and
+    ``matches``, the number of agreeing signature components — the MinHash
+    Jaccard estimate is matches / N_PERM.  ``sig`` carries h0.. and n."""
     inter = (
-        cand.join(sh.alias("x"), F.col("x.doc_id") == F.col("a_id"))
+        pairs.join(sh.select(F.col("doc_id").alias("a_id"), "shingle"), "a_id")
         .join(
-            sh.alias("y"),
-            (F.col("y.doc_id") == F.col("b_id"))
-            & (F.col("y.shingle") == F.col("x.shingle")),
+            sh.select(F.col("doc_id").alias("b_id"), "shingle"),
+            ["b_id", "shingle"],
         )
         .groupBy("a_id", "b_id")
-        .agg(F.count("*").alias("intersection"))
+        .agg(F.count("*").alias("it"))
     )
-    sa = sig.select(
-        F.col("doc_id").alias("_a"), *[F.col(f"h{j}").alias(f"a{j}") for j in range(_N_PERM)]
+    sa, sb = (
+        sig.select(
+            F.col("doc_id").alias(f"{x}_id"),
+            *[F.col(f"h{j}").alias(f"h{x}{j}") for j in range(_N_PERM)],
+            F.col("n").alias(f"n{x}"),
+        )
+        for x in "ab"
     )
-    sb = sig.select(
-        F.col("doc_id").alias("_b"), *[F.col(f"h{j}").alias(f"b{j}") for j in range(_N_PERM)]
-    )
-    za = sizes.select(F.col("doc_id").alias("_za"), F.col("n").alias("na"))
-    zb = sizes.select(F.col("doc_id").alias("_zb"), F.col("n").alias("nb"))
     matches = sum(
-        F.when(F.col(f"a{j}") == F.col(f"b{j}"), 1).otherwise(0)
-        for j in range(_N_PERM)
+        (F.col(f"ha{j}") == F.col(f"hb{j}")).cast("int") for j in range(_N_PERM)
     )
     return (
-        cand.join(sa, F.col("a_id") == F.col("_a"))
-        .join(sb, F.col("b_id") == F.col("_b"))
-        .join(za, F.col("a_id") == F.col("_za"))
-        .join(zb, F.col("b_id") == F.col("_zb"))
+        pairs.join(sa, "a_id")
+        .join(sb, "b_id")
         .join(inter, ["a_id", "b_id"], "left")
         .select(
             "a_id",
             "b_id",
-            (matches / float(_N_PERM)).alias("est_jaccard"),
-            (
-                F.coalesce("intersection", F.lit(0)).cast("double")
-                / (F.col("na") + F.col("nb") - F.coalesce("intersection", F.lit(0)))
-            ).alias("exact_jaccard"),
+            "na",
+            "nb",
+            F.coalesce(F.col("it"), F.lit(0).cast("long")).alias("it"),
+            matches.cast("long").alias("matches"),
         )
+    )
+
+
+def _exact_jaccard() -> Column:
+    return F.col("it").cast("double") / (F.col("na") + F.col("nb") - F.col("it"))
+
+
+def _calibration_bins(scored: DataFrame, j_exact: Column, *keys: str) -> DataFrame:
+    """Per (keys, exact-Jaccard decile): n_pairs and the means of the
+    MinHash estimate (``matches`` / N_PERM), of the exact Jaccard and of
+    their absolute error.  Doubles are summed as DECIMAL(24,6) so every
+    bin is order-independent."""
+    est = F.col("matches") / F.lit(float(_N_PERM))
+    return scored.groupBy(*keys, F.floor(j_exact * 10).cast("long").alias("bin")).agg(
+        F.count("*").alias("n_pairs"),
+        (F.sum("matches").cast("double") / _N_PERM / F.count("*")).alias("mean_est"),
+        (F.sum(j_exact.cast("decimal(24,6)")).cast("double") / F.count("*")).alias(
+            "mean_exact"
+        ),
+        (
+            F.sum(F.abs(est - j_exact).cast("decimal(24,6)")).cast("double")
+            / F.count("*")
+        ).alias("mean_abs_err"),
     )
 
 
@@ -1449,26 +1452,14 @@ def dedup_incremental_arrivals(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
     sh = cache_scoped(_spark_shingles(docs))
-    sig = sh.groupBy("doc_id").agg(
-        *[
-            F.min(F.md5(F.concat(F.col("shingle"), F.lit(f"#{j}")))).alias(f"h{j}")
-            for j in range(_N_PERM)
-        ]
-    )
-    # Round-14: band rows via one inline(array(structs)) instead of a
-    # per-band union (the dedup_minhash_lsh move) — the union ran the
+    sig = sh.groupBy("doc_id").agg(*signature_cols())
+    # Round-14: inline band rows, not a per-band union — the union ran the
     # signature final aggregate once per branch per side of the
     # new/corpus split, whose differing filters defeat exchange reuse.
     # A/B: JVM CPU 0.79x warm / 0.55x cold.  (cache_scoped(sig) also
     # measured: wall 0.81x but CPU 1.52x — cache tax again; rejected,
-    # tools/r14_variants.py::dedup_incremental_arrivals_v2.)
-    structs = ", ".join(
-        "struct({bi} as band_id, md5(concat({cols})) as band)".format(
-            bi=bi, cols=", ".join(f"h{j}" for j in band)
-        )
-        for bi, band in enumerate(_BANDS)
-    )
-    bands = sig.select("doc_id", F.expr(f"inline(array({structs}))"))
+    # OPTIMIZATION_r14.md §7.)
+    bands = band_rows(sig.select("doc_id", *band_digest_cols()), "doc_id")
     flagged = bands.join(flags, "doc_id")
     new_side = flagged.filter(F.col("is_new")).select(
         F.col("doc_id").alias("new_id"), "band_id", "band"
@@ -2613,53 +2604,18 @@ def dedup_lsh_band_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     `tools/scale_smoke.py::build_recall_sample`)."""
     (docs,) = T(spark, sf_dir, "documents")
     sh = cache_scoped(_spark_shingles(docs))
-    sig = cache_scoped(
-        sh.groupBy("doc_id").agg(
-            *[
-                F.min(F.md5(F.concat(F.col("shingle"), F.lit(f"#{j}")))).alias(
-                    f"h{j}"
-                )
-                for j in range(_N_PERM)
-            ]
-        )
-    )
+    sig = cache_scoped(sh.groupBy("doc_id").agg(*signature_cols()))
     exact = cache_scoped(dedup_ngram_jaccard(spark, sf_dir).select("a_id", "b_id"))
     cands = None
     for nb, bands in _SWEEP_GEOMS:
-        digests = sig.select(
-            "doc_id",
-            *[
-                F.md5(F.concat(*[F.col(f"h{j}") for j in band])).alias(f"d{bi}")
-                for bi, band in enumerate(bands)
-            ],
+        rows = band_rows(
+            sig.select("doc_id", *band_digest_cols(bands)), "doc_id", n_bands=nb
         )
-        rows = None
-        for bi in range(nb):
-            br = digests.select(
-                "doc_id",
-                F.lit(bi).alias("band_id"),
-                F.col(f"d{bi}").alias("band"),
-            )
-            rows = br if rows is None else rows.unionAll(br)
-        a = rows.alias("a")
-        b = rows.alias("b")
-        c = (
-            a.join(
-                b,
-                (F.col("a.band_id") == F.col("b.band_id"))
-                & (F.col("a.band") == F.col("b.band"))
-                & (F.col("a.doc_id") < F.col("b.doc_id")),
-            )
-            .select(
-                F.col("a.doc_id").alias("a_id"), F.col("b.doc_id").alias("b_id")
-            )
-            .distinct()
-            .select(
-                F.lit(nb).alias("n_bands"),
-                F.lit(8 // nb).alias("rows_per_band"),
-                "a_id",
-                "b_id",
-            )
+        c = candidate_pairs(rows).select(
+            F.lit(nb).alias("n_bands"),
+            F.lit(8 // nb).alias("rows_per_band"),
+            "a_id",
+            "b_id",
         )
         cands = c if cands is None else cands.unionAll(c)
     truth = exact.agg(F.count("*").alias("n_true"))
@@ -3012,89 +2968,11 @@ def minhash_jaccard_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     (docs,) = T(spark, sf_dir, "documents")
     sh = cache_scoped(_spark_shingles(docs))
     sig = cache_scoped(
-        sh.groupBy("doc_id").agg(
-            *[
-                F.min(
-                    F.md5(F.concat(F.col("shingle"), F.lit(f"#{j}")))
-                ).alias(f"h{j}")
-                for j in range(_N_PERM)
-            ],
-            F.count("*").alias("n"),
-        )
+        sh.groupBy("doc_id").agg(*signature_cols(), F.count("*").alias("n"))
     )
-    bands = None
-    for bi, band in enumerate(_BANDS):
-        b = sig.select(
-            "doc_id",
-            F.lit(bi).alias("band_id"),
-            F.md5(F.concat(*[F.col(f"h{j}") for j in band])).alias("band"),
-        )
-        bands = b if bands is None else bands.unionAll(b)
-    a, b = bands.alias("a"), bands.alias("b")
-    cand = (
-        a.join(
-            b.hint("shuffle_merge"),
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("a_id"), F.col("b.doc_id").alias("b_id"))
-        .distinct()
-    )
-    inter = (
-        cand.join(sh.select(F.col("doc_id").alias("a_id"), "shingle"), "a_id")
-        .join(
-            sh.select(F.col("doc_id").alias("b_id"), "shingle"),
-            ["b_id", "shingle"],
-        )
-        .groupBy("a_id", "b_id")
-        .agg(F.count("*").alias("it"))
-    )
-    sa = sig.select(
-        F.col("doc_id").alias("a_id"),
-        *[F.col(f"h{j}").alias(f"ha{j}") for j in range(_N_PERM)],
-        F.col("n").alias("na"),
-    )
-    sb = sig.select(
-        F.col("doc_id").alias("b_id"),
-        *[F.col(f"h{j}").alias(f"hb{j}") for j in range(_N_PERM)],
-        F.col("n").alias("nb"),
-    )
-    matches = None
-    for j in range(_N_PERM):
-        m = (F.col(f"ha{j}") == F.col(f"hb{j}")).cast("int")
-        matches = m if matches is None else matches + m
-    scored = (
-        cand.join(sa, "a_id")
-        .join(sb, "b_id")
-        .join(inter, ["a_id", "b_id"])
-        .select(
-            matches.cast("long").alias("matches"),
-            "it",
-            (F.col("na") + F.col("nb") - F.col("it")).alias("un"),
-        )
-    )
-    j_exact = F.col("it").cast("double") / F.col("un")
-    est = F.col("matches") / F.lit(float(_N_PERM))
-    return (
-        scored.groupBy(
-            F.floor(j_exact * 10).cast("long").alias("bin")
-        )
-        .agg(
-            F.count("*").alias("n_pairs"),
-            (
-                F.sum("matches").cast("double") / _N_PERM / F.count("*")
-            ).alias("mean_est"),
-            (
-                F.sum(j_exact.cast("decimal(24,6)")).cast("double")
-                / F.count("*")
-            ).alias("mean_exact"),
-            (
-                F.sum(F.abs(est - j_exact).cast("decimal(24,6)")).cast("double")
-                / F.count("*")
-            ).alias("mean_abs_err"),
-        )
-    )
+    bands = band_rows(sig.select("doc_id", *band_digest_cols()), "doc_id")
+    cand = candidate_pairs(bands)
+    return _calibration_bins(_scored_pairs(cand, sh, sig), _exact_jaccard())
 
 
 # ---------------------------------------------------------------------------
@@ -3182,15 +3060,7 @@ def minhash_calibration_random_pairs(spark: SparkSession, sf_dir: str) -> DataFr
 
     sh = cache_scoped(_spark_shingles(docs))
     sig = cache_scoped(
-        sh.groupBy("doc_id").agg(
-            *[
-                F.min(
-                    F.md5(F.concat(F.col("shingle"), F.lit(f"#{j}")))
-                ).alias(f"h{j}")
-                for j in range(_N_PERM)
-            ],
-            F.count("*").alias("n"),
-        )
+        sh.groupBy("doc_id").agg(*signature_cols(), F.count("*").alias("n"))
     )
     # rank only shingle-ELIGIBLE docs (those with a signature, i.e. >= 3
     # words): pairing an ineligible doc would silently drop its pair at the
@@ -3208,62 +3078,7 @@ def minhash_calibration_random_pairs(spark: SparkSession, sf_dir: str) -> DataFr
     )
     even = ranked.select(F.col("doc_id").alias("b_id"), F.col("rk").alias("brk"))
     pairs = odd.join(even, "brk").select("a_id", "b_id")
-    inter = (
-        pairs.join(sh.select(F.col("doc_id").alias("a_id"), "shingle"), "a_id")
-        .join(
-            sh.select(F.col("doc_id").alias("b_id"), "shingle"),
-            ["b_id", "shingle"],
-        )
-        .groupBy("a_id", "b_id")
-        .agg(F.count("*").alias("it"))
-    )
-    sa = sig.select(
-        F.col("doc_id").alias("a_id"),
-        *[F.col(f"h{j}").alias(f"ha{j}") for j in range(_N_PERM)],
-        F.col("n").alias("na"),
-    )
-    sb = sig.select(
-        F.col("doc_id").alias("b_id"),
-        *[F.col(f"h{j}").alias(f"hb{j}") for j in range(_N_PERM)],
-        F.col("n").alias("nb"),
-    )
-    matches = None
-    for j in range(_N_PERM):
-        m = (F.col(f"ha{j}") == F.col(f"hb{j}")).cast("int")
-        matches = m if matches is None else matches + m
-    scored = (
-        pairs.join(sa, "a_id")
-        .join(sb, "b_id")
-        .join(inter, ["a_id", "b_id"], "left")
-        .select(
-            matches.cast("long").alias("matches"),
-            F.coalesce(F.col("it"), F.lit(0).cast("long")).alias("it"),
-            (
-                F.col("na")
-                + F.col("nb")
-                - F.coalesce(F.col("it"), F.lit(0).cast("long"))
-            ).alias("un"),
-        )
-    )
-    j_exact = F.col("it").cast("double") / F.col("un")
-    est = F.col("matches") / F.lit(float(_N_PERM))
-    return (
-        scored.groupBy(F.floor(j_exact * 10).cast("long").alias("bin"))
-        .agg(
-            F.count("*").alias("n_pairs"),
-            (
-                F.sum("matches").cast("double") / _N_PERM / F.count("*")
-            ).alias("mean_est"),
-            (
-                F.sum(j_exact.cast("decimal(24,6)")).cast("double")
-                / F.count("*")
-            ).alias("mean_exact"),
-            (
-                F.sum(F.abs(est - j_exact).cast("decimal(24,6)")).cast("double")
-                / F.count("*")
-            ).alias("mean_abs_err"),
-        )
-    )
+    return _calibration_bins(_scored_pairs(pairs, sh, sig), _exact_jaccard())
 
 
 # ---------------------------------------------------------------------------
@@ -3407,10 +3222,7 @@ def minhash_calibration_truncation_pairs(
         "doc_id",
         "n",
         "i",
-        *[
-            F.md5(F.concat(F.col("shingle"), F.lit(f"#{j}"))).alias(f"h{j}")
-            for j in range(_N_PERM)
-        ],
+        *[perm_hash(j).alias(f"h{j}") for j in range(_N_PERM)],
     )
     aggs = [F.count("*").alias("c_full")]
     for j in range(_N_PERM):
@@ -3439,30 +3251,7 @@ def minhash_calibration_truncation_pairs(
     scored = sigs.select(
         F.explode(F.expr(f"array({', '.join(variant_structs)})")).alias("v")
     ).select("v.pct", "v.matches", "v.j_exact")
-    return (
-        scored.groupBy(
-            "pct", F.floor(F.col("j_exact") * 10).cast("long").alias("bin")
-        )
-        .agg(
-            F.count("*").alias("n_pairs"),
-            (
-                F.sum("matches").cast("double") / _N_PERM / F.count("*")
-            ).alias("mean_est"),
-            (
-                F.sum(F.col("j_exact").cast("decimal(24,6)")).cast("double")
-                / F.count("*")
-            ).alias("mean_exact"),
-            (
-                F.sum(
-                    F.abs(
-                        F.col("matches") / F.lit(float(_N_PERM))
-                        - F.col("j_exact")
-                    ).cast("decimal(24,6)")
-                ).cast("double")
-                / F.count("*")
-            ).alias("mean_abs_err"),
-        )
-    )
+    return _calibration_bins(scored, F.col("j_exact"), "pct")
 
 
 minhash_calibration_truncation_pairs.__doc__ = (
@@ -4127,37 +3916,44 @@ def decontaminate_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     (docs,) = T(spark, sf_dir, "documents")
     sh = _spark_shingles(docs)
     sig = sh.groupBy("doc_id").agg(
-        *[
-            F.min(F.md5(F.concat(F.col("shingle"), F.lit(f"#{j}")))).alias(f"h{j}")
-            for j in range(_N_PERM)
-        ],
+        *signature_cols(),
         F.array_sort(F.collect_list(F.xxhash64("shingle"))).alias("sh_arr"),
         F.count("*").alias("n"),
     )
-    dig = sig.select(
+    # band rows carry the PRIOR band digests for the first-match filter
+    prior = [f"d{k}" for k in range(len(_BANDS) - 1)]
+    rows = band_rows(
+        sig.select(
+            "doc_id",
+            "sh_arr",
+            "n",
+            *band_digest_cols(),
+            F.expr(_DECON_SUB_EVAL).alias("is_eval"),
+        ),
         "doc_id",
         "sh_arr",
         "n",
-        *[
-            F.md5(F.concat(*[F.col(f"h{j}") for j in band])).alias(f"d{bi}")
-            for bi, band in enumerate(_BANDS)
-        ],
-        F.expr(_DECON_SUB_EVAL).alias("is_eval"),
+        "is_eval",
+        *prior,
     )
-    ev = dig.filter("is_eval").select(
+    ev = rows.filter("is_eval").select(
         F.col("doc_id").alias("eval_doc_id"),
         F.col("sh_arr").alias("e_arr"),
         F.col("n").alias("e_n"),
-        *[F.col(f"d{bi}").alias(f"e_d{bi}") for bi in range(len(_BANDS))],
+        F.col("band_id").alias("e_band_id"),
+        F.col("band").alias("e_band"),
+        *[F.col(d).alias(f"e_{d}") for d in prior],
     )
-    tr = dig.filter(~F.col("is_eval"))
-    matched = None
-    for bi in range(len(_BANDS)):
-        cond = F.col(f"d{bi}") == F.col(f"e_d{bi}")
-        for pj in range(bi):  # first-match banding, map-side
-            cond = cond & (F.col(f"d{pj}") != F.col(f"e_d{pj}"))
-        m = tr.join(F.broadcast(ev), cond)
-        matched = m if matched is None else matched.unionAll(m)
+    tr = rows.filter(~F.col("is_eval"))
+    first_match = F.lit(True)
+    for k in range(1, len(_BANDS)):
+        first_match = first_match & (
+            (F.col("band_id") < k) | (F.col(f"d{k - 1}") != F.col(f"e_d{k - 1}"))
+        )
+    matched = tr.join(
+        F.broadcast(ev),
+        (F.col("band_id") == F.col("e_band_id")) & (F.col("band") == F.col("e_band")),
+    ).filter(first_match)
     withi = matched.withColumn(
         "i", F.expr("size(array_intersect(sh_arr, e_arr))").cast("long")
     )

@@ -28,7 +28,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from map_reduce485_spark.queries import query
-from map_reduce485_spark.queries._util import T, cache_scoped
+from map_reduce485_spark.queries._util import (
+    T,
+    cache_scoped,
+    checkpoint_scoped,
+    release_checkpoint,
+)
 
 _DIM = 64
 
@@ -1642,8 +1647,11 @@ def mmr_diversified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         # round (anti-join, selected-side join, union), so an uncut plan
         # grows geometrically and Catalyst analysis dominates runtime — the
         # `operators/components.py` lesson; the frame is ≤ Q·k rows, so the
-        # eager checkpoint is effectively free.
-        sel = sel.unionAll(pick).localCheckpoint(eager=True)
+        # eager checkpoint is effectively free.  The previous generation is
+        # released as soon as the next one is materialized.
+        nxt = checkpoint_scoped(sel.unionAll(pick))
+        release_checkpoint(sel)
+        sel = nxt
     return sel.select(
         "query_id", "cid", "pick_rank", F.round("score", 6).alias("score")
     )

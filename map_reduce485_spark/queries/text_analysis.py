@@ -3181,8 +3181,10 @@ def gopher_repetition_filters(spark: SparkSession, sf_dir: str) -> DataFrame:
     Metric definitions kept exactly rational so both engines agree
     bit-for-bit: the denominator is total characters over ALL n-gram
     occurrences of that n (not raw doc chars — self-normalizing, ≤ 1 by
-    construction); the "most frequent" tie-break is (count, gram length,
-    gram) lexicographic max, so the winner is deterministic; each
+    construction); grams are counted per (xxhash64(gram), gram length)
+    and the "most frequent" gram is the (count, gram length, hash) max —
+    every fraction depends only on the winner's count and length, so
+    which gram wins a tie cannot change the output; each
     fraction is ONE bigint/bigint division (correctly-rounded IEEE on
     both engines), and the pass flags are exact comparisons of those
     doubles.  Source texts have no newlines, so Gopher's line-dup

@@ -382,6 +382,48 @@ def test_minhash_banded_no_pair_dedup_shuffle(spark):
     assert len(pair_aggs) == 0, pair_aggs
 
 
+def _logical_nodes(jnode):
+    stack = [jnode]
+    while stack:
+        n = stack.pop()
+        yield n
+        ch = n.children()
+        stack.extend(ch.apply(i) for i in range(ch.size()))
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "dedup_minhash_lsh",
+        "minhash_estimate_quality",
+        "dedup_incremental_arrivals",
+        "dedup_lsh_band_sweep",
+        "minhash_jaccard_calibration",
+        "decontaminate_minhash_lsh",
+    ],
+)
+def test_minhash_band_rows_not_unioned(spark, name):
+    """Every banding MinHash consumer derives its band rows from one
+    `inline` over the signature (operators/minhash.py): no Union may feed
+    a band join, since a per-band union re-runs the signature aggregate
+    once per branch per join side.  (minhash_calibration_random_pairs
+    scores a random matching and never bands.)"""
+    from map_reduce485_spark.queries._util import release_scoped_caches
+
+    plan = _q(spark, name)._jdf.queryExecution().optimizedPlan()
+    band_joins = [
+        n
+        for n in _logical_nodes(plan)
+        if n.getClass().getSimpleName() == "Join"
+        and "band_id#" in n.condition().toString()
+    ]
+    release_scoped_caches()
+    assert band_joins, f"{name}: no band join found"
+    for j in band_joins:
+        below = {n.getClass().getSimpleName() for n in _logical_nodes(j)}
+        assert "Union" not in below, f"{name}: Union feeds a band join"
+
+
 def test_ngram_commonness_single_gram_stream_no_join(spark):
     """The gram document frequency must come from a window over the gram
     key, not a groupBy-then-join-back: the join formulation made Spark

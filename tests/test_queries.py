@@ -471,6 +471,63 @@ def test_scoped_caches_release_storage(spark):
     release_scoped_caches()
 
 
+def test_checkpoint_release_spares_concurrent_caches(spark):
+    """checkpoint_scoped claims exactly its plan's RDD: a frame another
+    thread caches while checkpoints run stays persisted through
+    release_scoped_caches(), and no checkpoint storage outlives it."""
+    import threading
+
+    from map_reduce485_spark.queries._util import (
+        _SCOPED_CHECKPOINTS,
+        checkpoint_scoped,
+        release_scoped_caches,
+    )
+
+    release_scoped_caches()
+    sc = spark.sparkContext
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    foreign: list = []
+    done = threading.Event()
+
+    def cache_loop():
+        while not done.is_set() and len(foreign) < 50:
+            df = spark.range(1000 + len(foreign)).selectExpr("id * 7 AS x")
+            df.cache().count()
+            foreign.append(df)
+
+    worker = threading.Thread(target=cache_loop)
+    worker.start()
+    ckpt_ids: set[int] = set()
+    try:
+        for i in range(6):
+            out = checkpoint_scoped(
+                spark.range(500 + i).selectExpr("id % 11 AS k").distinct()
+            )
+            assert out._mr485_ckpt_ids == [int(out._jdf.logicalPlan().rdd().id())]
+            ckpt_ids.update(out._mr485_ckpt_ids)
+    finally:
+        done.set()
+        worker.join(timeout=120)
+    assert not worker.is_alive()
+    try:
+        foreign_ids = {
+            int(
+                cm.lookupCachedData(df._jdf).get().cachedRepresentation()
+                .cacheBuilder().cachedColumnBuffers().id()
+            )
+            for df in foreign
+        }
+        assert foreign_ids and not foreign_ids & ckpt_ids
+        release_scoped_caches()
+        left = {int(i) for i in sc._jsc.getPersistentRDDs().keySet().toArray()}
+        assert not _SCOPED_CHECKPOINTS
+        assert foreign_ids <= left, "another thread's cache was released"
+        assert not left & ckpt_ids, "checkpoint storage left after release"
+    finally:
+        for df in foreign:
+            df.unpersist()
+
+
 # -- exact-moment statistics (round 5 continuation) --------------------------
 
 
