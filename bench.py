@@ -24,6 +24,7 @@ os.environ.setdefault("SPARK_GRAFT_CACHE_TABLES", "0")
 from map_reduce485_spark import get_spark
 from map_reduce485_spark.queries import bench_queries
 from map_reduce485_spark.queries._util import release_scoped_caches
+from tools.measure import COLLECT, Meter
 
 
 def main() -> None:
@@ -31,10 +32,8 @@ def main() -> None:
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else None
 
-    spark = get_spark("bench")
-    # JVM + codegen warm-up on a trivial action so query timings measure the
-    # queries, not session bring-up.
-    spark.range(1000).selectExpr("sum(id)").collect()
+    meter = Meter(get_spark("bench"))
+    meter.warm_up()
 
     # Box-contention marker (round-4 verdict item 6): the artifact records the
     # 1-minute load average and a fixed tiny calibration query's best-of-3 so a
@@ -67,18 +66,7 @@ def main() -> None:
             loadavg = round(os.getloadavg()[0], 2)
         box_contended = loadavg > cpus / 2
 
-    def _calibrate() -> float:
-        runs = []
-        for _ in range(3):
-            t0 = time.perf_counter()
-            # modulo keeps the running sum ~5e13 << 2^63 (ANSI mode overflows
-            # a plain sum(id*id) at this row count)
-            spark.range(50_000_000).selectExpr("sum(id % 1000003) as s").collect()
-            runs.append(time.perf_counter() - t0)
-        return round(min(runs), 3)
-
-    _calibrate()  # warm the calibration query's codegen
-    calibration_sec = _calibrate()
+    calibration_sec = meter.calibrate()
 
     # Hypervisor-steal stamp (round-13 verdict item 3): the loadavg gate
     # above cannot see steal — the r13 box ran 2.2x slow at loadavg 5.65 with
@@ -100,18 +88,6 @@ def main() -> None:
     import tempfile
 
     sink = os.path.join(tempfile.gettempdir(), "mr485_bench_sink")
-
-    def run_once(spec) -> int:
-        """One measured execution.  Small results come back via collect (the
-        interactive contract); `bench_sink` queries write to parquet and
-        count from metadata — their output is a distributed intermediate
-        that no real pipeline collects (at 10x it exceeds
-        spark.driver.maxResultSize, see tools/scale_smoke.py)."""
-        df = spec.fn(spark, sf_dir)
-        if spec.bench_sink:
-            df.write.mode("overwrite").parquet(sink)
-            return spark.read.parquet(sink).count()
-        return len(df.collect())
 
     # Per-query protocol: one untimed warm-up pass (JIT compilation of the
     # query's generated code, parquet footer caching, shuffle buffer
@@ -140,20 +116,18 @@ def main() -> None:
     contended: list[str] = []
     total = 0.0
     for name, spec in bench_queries().items():
+        # Small results come back via collect; `bench_sink` queries write to
+        # parquet (their output is a distributed intermediate, see
+        # tools/measure.py).
+        target = sink if spec.bench_sink else COLLECT
         try:
-            run_once(spec)  # warm-up must never fail the bench
+            meter.run(spec.fn, sf_dir, target)  # warm-up must never fail the bench
         except Exception as exc:
             print(f"# warmup {name} failed: {exc}", file=sys.stderr)
             continue
         release_scoped_caches()  # first timed run pays cache materialization
-        t0 = time.perf_counter()
-        n_rows = run_once(spec)
-        cold[name] = round(time.perf_counter() - t0, 3)
-        runs = []
-        for _ in range(3):
-            t0 = time.perf_counter()
-            n_rows = run_once(spec)
-            runs.append(time.perf_counter() - t0)
+        cold[name] = round(meter.run(spec.fn, sf_dir, target).wall, 3)
+        runs = [meter.run(spec.fn, sf_dir, target) for _ in range(3)]
         # Contention self-labeling (round-4 verdict item 6, tightened in
         # round 6, refined in round 8): the reported number is the MINIMUM,
         # so what makes it trustworthy is reproduction — the second-best
@@ -166,27 +140,24 @@ def main() -> None:
         # recorded [best, worst] band either way, so a slow machine moment
         # is still IN the artifact — it just no longer invalidates a
         # reproduced minimum.
-        extra = 0
-        while sorted(runs)[1] > 1.5 * min(runs) and extra < 3:
-            t0 = time.perf_counter()
-            n_rows = run_once(spec)
-            runs.append(time.perf_counter() - t0)
-            extra += 1
-        dt = round(min(runs), 3)
+        walls = [r.wall for r in runs]
+        while sorted(walls)[1] > 1.5 * min(walls) and len(walls) < 6:
+            runs.append(meter.run(spec.fn, sf_dir, target))
+            walls.append(runs[-1].wall)
+        dt = round(min(walls), 3)
         timings[name] = dt
-        bands[name] = [dt, round(max(runs), 3)]
-        if sorted(runs)[1] > 1.5 * min(runs):
+        bands[name] = [dt, round(max(walls), 3)]
+        if sorted(walls)[1] > 1.5 * min(walls):
             contended.append(name)
         total += dt
         print(
-            f"# {name}: {dt:.3f}s (cold {cold[name]:.3f}s, worst {max(runs):.3f}s,"
-            f" {n_rows} rows)",
+            f"# {name}: {dt:.3f}s (cold {cold[name]:.3f}s, worst {max(walls):.3f}s,"
+            f" {runs[-1].rows} rows)",
             file=sys.stderr,
         )
         # release this query's scoped caches before the next query's runs;
         # big results' GC debt must not bleed into the next query
-        release_scoped_caches()
-        spark._jvm.System.gc()
+        meter.release()
 
     # Per-query regression gate (round-9 verdict item 6): compare each
     # query's best-of-N against the PREVIOUS round's recorded artifact and

@@ -231,11 +231,11 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--port", type=int, default=DEFAULT_PORT)
     p.add_argument("--cpus", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
     p.add_argument("--var", default=DEFAULT_VAR, help="state dir (pidfile, logs)")
-    # submit/wait options (defaults mirror reference submit.py:30-58)
-    p.add_argument("--input", "-i", default="tests/testdata/input")
+    # submit/wait options; --input/--mapper/--reducer are required by submit
+    p.add_argument("--input", "-i")
     p.add_argument("--output", "-o", default="output")
-    p.add_argument("--mapper", "-m", default="tests/testdata/exec/wc_map.sh")
-    p.add_argument("--reducer", "-r", default="tests/testdata/exec/wc_reduce.sh")
+    p.add_argument("--mapper", "-m")
+    p.add_argument("--reducer", "-r")
     p.add_argument("--nmappers", type=int, default=2)
     p.add_argument("--nreducers", type=int, default=2)
     p.add_argument("--job-id", type=int, default=None)
@@ -255,6 +255,9 @@ def main(argv: list[str] | None = None) -> int:
         rc = stop(args.port, args.var)
         return start(args.port, args.cpus, args.var) if rc in (0, 1) else rc
     if args.verb == "submit":
+        missing = [f"--{k}" for k in ("input", "mapper", "reducer") if getattr(args, k) is None]
+        if missing:
+            p.error(f"submit requires {', '.join(missing)}")
         reply = send_message(
             args.port,
             {

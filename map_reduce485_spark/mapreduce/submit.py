@@ -1,9 +1,9 @@
 """Job-submission CLI — the `mapreduce-submit` analog (reference
-submit.py:20-98), with the same six job parameters and the same word-count
-defaults.  Host/port options are absent: there is no hand-rolled manager to
-dial — the "cluster" is the SparkSession (local[] here; spark-submit to
-YARN/k8s in production, which is the reference's `bin/mapreduce` lifecycle
-tooling collapsed into Spark's own, SURVEY.md §2.a ops #17/#18).
+submit.py:20-98), with the same six job parameters.  Host/port options are
+absent: there is no hand-rolled manager to dial — the "cluster" is the
+SparkSession (local[] here; spark-submit to YARN/k8s in production, which
+is the reference's `bin/mapreduce` lifecycle tooling collapsed into
+Spark's own, SURVEY.md §2.a ops #17/#18).
 
 Usage:
     python -m map_reduce485_spark.mapreduce.submit \
@@ -21,11 +21,12 @@ from map_reduce485_spark.session import get_spark
 
 def main(argv: list[str] | None = None) -> None:
     p = argparse.ArgumentParser(description="Submit a MapReduce job (Layer A).")
-    # defaults mirror reference submit.py:30-58
-    p.add_argument("--input", "-i", default="tests/testdata/input")
+    # --output and the task counts keep reference submit.py:30-58's
+    # defaults; its input/mapper/reducer defaults name files this repo lacks
+    p.add_argument("--input", "-i", required=True)
     p.add_argument("--output", "-o", default="output")
-    p.add_argument("--mapper", "-m", default="tests/testdata/exec/wc_map.sh")
-    p.add_argument("--reducer", "-r", default="tests/testdata/exec/wc_reduce.sh")
+    p.add_argument("--mapper", "-m", required=True)
+    p.add_argument("--reducer", "-r", required=True)
     p.add_argument("--nmappers", type=int, default=2)
     p.add_argument("--nreducers", type=int, default=2)
     args = p.parse_args(argv)

@@ -12,6 +12,7 @@ from map_reduce485_spark.plans.inspect import (
     codegen_operator_count,
     explain_str,
     has_broadcast_join,
+    plan_shape,
     pushed_filters,
     read_schema_columns,
     wholestage_codegen_ids,
@@ -24,4 +25,5 @@ __all__ = [
     "has_broadcast_join",
     "wholestage_codegen_ids",
     "codegen_operator_count",
+    "plan_shape",
 ]

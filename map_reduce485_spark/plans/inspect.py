@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import re
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame
 
@@ -53,3 +54,28 @@ def codegen_operator_count(df: DataFrame) -> int:
     """Number of codegen'd operators (starred in simple-mode explain).
     Requires an executed plan under AQE, like `wholestage_codegen_ids`."""
     return len(re.findall(r"\*\(\d+\)", explain_str(df, "simple")))
+
+
+_JOINS = ("BroadcastHashJoin", "SortMergeJoin", "ShuffledHashJoin",
+          "BroadcastNestedLoopJoin", "CartesianProduct")
+_PYTHON_NODES = ("BatchEvalPython", "ArrowEvalPython", "MapInPandas", "MapInArrow",
+                 "FlatMapGroupsInPandas", "PythonMapInArrow")
+
+
+class PlanShape(NamedTuple):
+    exchanges: int
+    joins: list[str]
+    python_nodes: list[str]
+
+
+def plan_shape(text: str) -> PlanShape:
+    """Exchange count, join operators and Python-boundary nodes of a
+    ``formatted`` explain string.
+
+    Formatted output prints every node twice, once in the tree and once as
+    a numbered detail, and ``ReusedExchange`` contains "Exchange"; so only
+    the numbered ``Exchange``/``BroadcastExchange`` headers are counted."""
+    n_ex = len(re.findall(r"^\(\d+\) (?:Exchange|BroadcastExchange)", text, re.MULTILINE))
+    joins = sorted({j for j in _JOINS if f"{j} " in text or f"{j}(" in text})
+    py = sorted({p for p in _PYTHON_NODES if p in text})
+    return PlanShape(n_ex, joins, py)

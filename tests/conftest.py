@@ -21,16 +21,9 @@ def spark():
 
 @pytest.fixture(scope="session")
 def duck():
-    import duckdb
+    from tools.verify_local import open_oracle
 
-    from map_reduce485_spark.catalog import TABLES, table_path
-
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{table_path(SF_CORRECT, t)}')"
-        )
-    yield con
+    return open_oracle(SF_CORRECT)
 
 
 # ---------------------------------------------------------------------------

@@ -11,6 +11,7 @@ from pathlib import Path
 
 import pytest
 
+from map_reduce485_spark.mapreduce import cluster, submit
 from map_reduce485_spark.mapreduce.cluster import send_message, start, status, stop
 
 
@@ -84,3 +85,18 @@ def test_cluster_lifecycle_end_to_end(tmp_path):
     finally:
         assert stop(port, var) == 0
     assert status(port, var) == 1  # really gone
+
+
+@pytest.mark.parametrize(
+    "main, argv", [(submit.main, []), (cluster.main, ["submit"])], ids=["submit", "cluster"]
+)
+def test_submit_requires_input_mapper_reducer(main, argv, capsys):
+    """No defaults point at missing files: argument parsing rejects the call
+    before any Spark session or manager connection."""
+    with pytest.raises(SystemExit) as exc:
+        main(argv)
+    assert exc.value.code == 2
+    err = capsys.readouterr().err
+    for flag in ("--input", "--mapper", "--reducer"):
+        assert flag in err
+    assert "--output" not in err.splitlines()[-1]

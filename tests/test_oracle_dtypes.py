@@ -15,20 +15,12 @@ stays cheap enough to run in CI.
 
 from __future__ import annotations
 
-import duckdb
 import pytest
 
-from map_reduce485_spark.catalog import TABLES, table_path
 from map_reduce485_spark.queries import REGISTRY, _load_all
+from tools.verify_local import kind_mismatches, open_oracle
 
 from conftest import SF_SMOKE
-
-import sys
-from pathlib import Path
-
-sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "tools"))
-
-from verify_local import kind_mismatches  # noqa: E402
 
 _load_all()
 _ORACLE_PAIRED = [n for n, s in REGISTRY.items() if s.oracle is not None]
@@ -36,12 +28,7 @@ _ORACLE_PAIRED = [n for n, s in REGISTRY.items() if s.oracle is not None]
 
 @pytest.fixture(scope="module")
 def duck_smoke():
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{table_path(SF_SMOKE, t)}')"
-        )
-    yield con
+    return open_oracle(SF_SMOKE)
 
 
 @pytest.mark.parametrize("name", _ORACLE_PAIRED)

@@ -31,7 +31,6 @@ import argparse
 import importlib
 import os
 import sys
-import time
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
@@ -41,8 +40,7 @@ os.environ.setdefault("SPARK_GRAFT_CACHE_TABLES", "0")
 from map_reduce485_spark import get_spark
 from map_reduce485_spark.queries import REGISTRY, _load_all, bench_queries
 from map_reduce485_spark.queries._util import release_scoped_caches
-
-_TICK = os.sysconf("SC_CLK_TCK")
+from tools.measure import NOOP, Meter
 
 
 def _ratio(b: float, a: float) -> float:
@@ -82,14 +80,8 @@ def main() -> None:
         arms = (args.a, args.b)
 
     spark = get_spark("ab_code")
-    spark.range(1000).selectExpr("sum(id)").collect()
-    jpid = int(spark._jvm.ProcessHandle.current().pid())
-    stat_path = f"/proc/{jpid}/stat"
-
-    def jvm_cpu() -> float:
-        with open(stat_path) as f:
-            parts = f.read().rsplit(")", 1)[1].split()
-        return (int(parts[11]) + int(parts[12])) / _TICK  # utime + stime
+    meter = Meter(spark)
+    meter.warm_up()
 
     if args.variant is not None and not args.skip_parity:
         a = arms[0](spark, args.sf_dir)
@@ -101,13 +93,7 @@ def main() -> None:
             f"ROW MISMATCH: {len(ra)} vs {len(rb)} rows; "
             f"first diff: {next(((x, y) for x, y in zip(ra, rb) if x != y), None)}"
         )
-        release_scoped_caches()
         print(f"parity OK: {len(ra)} rows identical", flush=True)
-
-    def run_once(fn) -> tuple[float, float]:
-        c0, t0 = jvm_cpu(), time.perf_counter()
-        fn(spark, args.sf_dir).write.format("noop").mode("overwrite").save()
-        return time.perf_counter() - t0, jvm_cpu() - c0
 
     def block(name: str, arm):
         """One block of ``arm`` — a variant builder (code mode) or a conf
@@ -118,17 +104,16 @@ def main() -> None:
             fn = REGISTRY[name].fn
         else:
             fn = arm
-        cold = run_once(fn)
-        warm = [run_once(fn) for _ in range(args.reps)]
-        release_scoped_caches()
+        cold = meter.run(fn, args.sf_dir, NOOP)
+        warm = [meter.run(fn, args.sf_dir, NOOP) for _ in range(args.reps)]
         return warm, cold
 
     def best(runs) -> tuple[float, float]:
-        return min(r[0] for r in runs), min(r[1] for r in runs)
+        return min(r.wall for r in runs), min(r.cpu for r in runs)
 
     tot = [[0.0, 0.0], [0.0, 0.0]]
     for name in names:
-        spark._jvm.System.gc()
+        meter.release()
         warm: tuple[list, list] = ([], [])
         cold: tuple[list, list] = ([], [])
         for arm in (0, 1, 1, 0):
@@ -145,10 +130,10 @@ def main() -> None:
             f"cpu A={ca:.2f} B={cb:.2f} ({_ratio(cb, ca):.3f})\n"
             f"  COLD: wall A={cwa:.3f} B={cwb:.3f} ({_ratio(cwb, cwa):.3f})  "
             f"cpu A={cca:.2f} B={ccb:.2f} ({_ratio(ccb, cca):.3f})\n"
-            f"  rawWallA={[round(r[0], 3) for r in warm[0]]} "
-            f"rawWallB={[round(r[0], 3) for r in warm[1]]}\n"
-            f"  rawCpuA={[round(r[1], 2) for r in warm[0]]} "
-            f"rawCpuB={[round(r[1], 2) for r in warm[1]]}",
+            f"  rawWallA={[round(r.wall, 3) for r in warm[0]]} "
+            f"rawWallB={[round(r.wall, 3) for r in warm[1]]}\n"
+            f"  rawCpuA={[round(r.cpu, 2) for r in warm[0]]} "
+            f"rawCpuB={[round(r.cpu, 2) for r in warm[1]]}",
             flush=True,
         )
     if len(names) > 1:

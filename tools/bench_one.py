@@ -13,7 +13,6 @@ from __future__ import annotations
 import argparse
 import os
 import sys
-import time
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
@@ -22,7 +21,7 @@ os.environ.setdefault("SPARK_GRAFT_CACHE_TABLES", "0")
 
 from map_reduce485_spark import get_spark
 from map_reduce485_spark.queries import REGISTRY, _load_all
-from map_reduce485_spark.queries._util import release_scoped_caches
+from tools.measure import COLLECT, NOOP, Meter
 
 
 def main() -> None:
@@ -44,42 +43,25 @@ def main() -> None:
     names = [n.strip() for n in args.names.split(",") if n.strip()]
     extra = dict(kv.split("=", 1) for kv in args.conf)
     spark = get_spark("bench_one", extra_conf=extra or None)
-    spark.range(1000).selectExpr("sum(id)").collect()
-    jpid = int(spark._jvm.ProcessHandle.current().pid())
-    tick = os.sysconf("SC_CLK_TCK")
-
-    def jvm_cpu() -> float:
-        parts = open(f"/proc/{jpid}/stat").read().rsplit(")", 1)[1].split()
-        return (int(parts[11]) + int(parts[12])) / tick
+    meter = Meter(spark)
+    meter.warm_up()
 
     import tempfile
 
     sink = os.path.join(tempfile.gettempdir(), "mr485_bench_one_sink")
 
-    def run_once(spec) -> None:
-        df = spec.fn(spark, args.sf_dir)
-        if args.collect:
-            if spec.bench_sink:
-                df.write.mode("overwrite").parquet(sink)
-            else:
-                df.collect()
-        else:
-            df.write.format("noop").mode("overwrite").save()
-
     for name in names:
         spec = REGISTRY[name]
+        target = NOOP
+        if args.collect:
+            target = sink if spec.bench_sink else COLLECT
         spark.sparkContext.setJobDescription(f"bench_one:{name}")
-        run_once(spec)  # warm-up, untimed
-        runs, cpus_ = [], []
-        for _ in range(args.runs):
-            c0, t0 = jvm_cpu(), time.perf_counter()
-            run_once(spec)
-            runs.append(time.perf_counter() - t0)
-            cpus_.append(jvm_cpu() - c0)
-        release_scoped_caches()
-        spark._jvm.System.gc()
+        meter.run(spec.fn, args.sf_dir, target)  # warm-up, untimed
+        runs = [meter.run(spec.fn, args.sf_dir, target) for _ in range(args.runs)]
+        meter.release()
+        walls, cpus_ = [r.wall for r in runs], [r.cpu for r in runs]
         print(
-            f"{name}: wall best {min(runs):.3f}s all {[round(r, 3) for r in runs]} "
+            f"{name}: wall best {min(walls):.3f}s all {[round(r, 3) for r in walls]} "
             f"cpu best {min(cpus_):.2f}s all {[round(c, 2) for c in cpus_]}",
             flush=True,
         )

@@ -18,7 +18,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 os.environ.setdefault("SPARK_GRAFT_CACHE_TABLES", "0")
 
 from map_reduce485_spark import get_spark
-from map_reduce485_spark.plans import explain_str
+from map_reduce485_spark.plans import explain_str, plan_shape
 from map_reduce485_spark.queries import REGISTRY, _load_all, bench_queries
 
 
@@ -49,15 +49,7 @@ def main() -> None:
             text = f"ERROR building plan: {exc!r}"
         path = out_dir / f"{name}_{args.suffix}.txt"
         path.write_text(text)
-        n_ex = text.count("Exchange")
-        joins = [
-            j
-            for j in ("BroadcastHashJoin", "SortMergeJoin", "ShuffledHashJoin",
-                      "BroadcastNestedLoopJoin", "CartesianProduct")
-            if j in text
-        ]
-        py = [p for p in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas",
-                          "MapInArrow", "FlatMapGroupsInPandas") if p in text]
+        n_ex, joins, py = plan_shape(text)
         print(f"{name}: Exchange={n_ex} joins={joins} python={py} -> {path.name}")
 
 

@@ -18,19 +18,9 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 os.environ.setdefault("SPARK_GRAFT_CACHE_TABLES", "1")  # sweep speed; shapes unchanged
 
 from map_reduce485_spark import get_spark
-from map_reduce485_spark.plans import explain_str
+from map_reduce485_spark.plans import explain_str, plan_shape
 from map_reduce485_spark.queries import REGISTRY, _load_all
 from map_reduce485_spark.queries._util import release_scoped_caches
-
-_JOINS = (
-    "BroadcastHashJoin",
-    "SortMergeJoin",
-    "ShuffledHashJoin",
-    "BroadcastNestedLoopJoin",
-    "CartesianProduct",
-)
-_PY = ("BatchEvalPython", "ArrowEvalPython", "MapInPandas", "MapInArrow",
-       "FlatMapGroupsInPandas", "PythonMapInArrow")
 
 
 def main() -> None:
@@ -46,12 +36,7 @@ def main() -> None:
         try:
             df = spec.fn(spark, args.sf_dir)
             txt = explain_str(df, "formatted")
-            # formatted plans put partitioning in a detail line ("Arguments:
-            # hashpartitioning(...)"), so count numbered Exchange headers —
-            # the r13-era inline regex matched nothing and reported ex=0
-            n_ex = len(re.findall(r"^\(\d+\) (?:Exchange|BroadcastExchange)", txt, re.MULTILINE))
-            joins = sorted({j for j in _JOINS if f"{j} " in txt or f"{j}(" in txt})
-            py = sorted({p for p in _PY if p in txt})
+            n_ex, joins, py = plan_shape(txt)
             single = "SinglePartition" in txt
             global_sort = bool(re.search(r"\bSort \[[^\]]*\], true", txt)) and "TakeOrderedAndProject" not in txt
             lines.append(

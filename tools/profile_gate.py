@@ -14,15 +14,15 @@ from __future__ import annotations
 import argparse
 import sys
 import time
+from pathlib import Path
 
-import duckdb
-
-sys.path.insert(0, ".")
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from pyspark.sql import SparkSession
 
-from map_reduce485_spark.catalog import TABLES, table_path
 from map_reduce485_spark.queries import REGISTRY, _load_all
+from tools.measure import COLLECT, Meter
+from tools.verify_local import open_oracle
 
 
 def main() -> int:
@@ -47,25 +47,19 @@ def main() -> int:
     spark.sparkContext.setLogLevel("WARN")
     boot = time.time() - t_boot
 
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{table_path(args.sf, t)}')"
-        )
+    meter = Meter(spark)
+    con = open_oracle(args.sf)
 
     rows = []
     total_spark = total_oracle = 0.0
     for name in names:
         spec = REGISTRY[name]
-        t0 = time.time()
         try:
-            sdf = spec.fn(spark, args.sf)
-            n = len(sdf.collect())
+            t_spark, _, n = meter.run(spec.fn, args.sf, COLLECT)
         except Exception as exc:
             print(f"ERROR {name}: {exc}", file=sys.stderr)
             rows.append((name, float("nan"), 0.0, -1))
             continue
-        t_spark = time.time() - t0
         t1 = time.time()
         if spec.oracle is not None:
             try:

@@ -44,6 +44,7 @@ import shutil
 import sys
 import time
 from pathlib import Path
+from unittest import mock
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
@@ -54,6 +55,7 @@ from pyspark.sql import functions as F
 
 from map_reduce485_spark import get_spark
 from map_reduce485_spark.catalog import load_table
+from tools.measure import Meter
 
 BASE_SF = "/root/testdata/sf0.1"
 OUT = Path("/tmp/mr485_scale")
@@ -131,23 +133,6 @@ def warm_page_cache(sf_dir: str) -> dict:
     return {"bytes": n_bytes, "sec": round(time.perf_counter() - t0, 2)}
 
 
-def calibrate(spark) -> float:
-    """bench.py's fixed CPU-bound calibration query (best-of-3, codegen
-    pre-warmed): stamps box speed into the artifact so the drift gate can
-    divide machine state out of cross-round ratios instead of flagging a
-    slower box as regression (round-11 verdict item 3)."""
-    def _once() -> float:
-        runs = []
-        for _ in range(3):
-            t0 = time.perf_counter()
-            spark.range(50_000_000).selectExpr("sum(id % 1000003) as s").collect()
-            runs.append(time.perf_counter() - t0)
-        return round(min(runs), 3)
-
-    _once()  # warm codegen
-    return _once()
-
-
 def build_recall_sample(spark, sf_dir: str, mult: int) -> str:
     """Dup-FAMILY-preserving sampled documents slice for the LSH recall
     eval: the generator scales doc_id as base*mult + copy, so sampling on
@@ -180,6 +165,7 @@ def main() -> int:
     args = ap.parse_args()
 
     spark = get_spark("scale_smoke")
+    meter = Meter(spark)
     if args.skip_build and (OUT / f"x{args.mult}").exists():
         sf_dir, build_sec = str(OUT / f"x{args.mult}"), 0.0
     else:
@@ -189,7 +175,10 @@ def main() -> int:
     print(json.dumps({"step": "build", "mult": args.mult, "sec": build_sec}))
     warm = warm_page_cache(sf_dir)
     print(json.dumps({"step": "warm_page_cache", **warm}))
-    calibration_sec = calibrate(spark)
+    # bench.py's calibration query stamps box speed into the artifact so the
+    # drift gate can divide machine state out of cross-round ratios instead
+    # of flagging a slower box as regression (round-11 verdict item 3)
+    calibration_sec = meter.calibrate()
     print(json.dumps({"step": "calibrate", "sec": calibration_sec}))
 
     from map_reduce485_spark.queries import REGISTRY, _load_all
@@ -365,11 +354,7 @@ def main() -> int:
     # clusters → keep-one before anything leaves the cluster).  Writing is
     # also the operation a real 100 TB job performs; row counts come from
     # parquet metadata afterwards.
-    sink = OUT / "sink"
-
-    def run_once(fn) -> int:
-        fn(spark, sf_dir).write.mode("overwrite").parquet(str(sink))
-        return spark.read.parquet(str(sink)).count()
+    sink = str(OUT / "sink")
 
     def reset_state() -> None:
         """Per-entry state reset (round-12 verdict item 2): the r12 100x
@@ -389,10 +374,7 @@ def main() -> int:
         The measured state is unchanged — still 'warmed' — so artifacts
         stay drift-comparable with the round-12 baselines."""
         spark.catalog.clearCache()
-        try:
-            spark.sparkContext._jvm.System.gc()
-        except Exception:
-            pass
+        meter.release()
         warm_page_cache(sf_dir)
 
     if args.names:
@@ -419,69 +401,31 @@ def main() -> int:
     total = 0.0
     for name in names:
         reset_state()
+        query, in_dir, env, extra = name, sf_dir, {}, {}
         if name == _SAMPLED_RECALL:
             t0 = time.perf_counter()
-            samp_dir = build_recall_sample(spark, sf_dir, args.mult)
-            sample_build = round(time.perf_counter() - t0, 2)
-            rfn = REGISTRY["dedup_lsh_recall_eval"].fn
-
-            def sampled_once() -> int:
-                rfn(spark, samp_dir).write.mode("overwrite").parquet(str(sink))
-                return spark.read.parquet(str(sink)).count()
-
-            sampled_once()  # warm
-            best, n = float("inf"), 0
-            for _ in range(args.runs):
-                t0 = time.perf_counter()
-                n = sampled_once()
-                best = min(best, time.perf_counter() - t0)
-            row = spark.read.parquet(str(sink)).collect()[0]  # 1-row output
-            total += best
-            queries[name] = {
-                "rows": n,
-                "sec": round(best, 2),
-                "sample_build_sec": sample_build,
-                "n_exact": row.n_exact,
-                "n_lsh": row.n_lsh,
-                "n_common": row.n_common,
-                "recall": row.recall,
-            }
-            print(json.dumps({"query": name, **queries[name]}))
-            continue
-        if name == _PAGERANK_SHUFFLE:
+            query, in_dir = "dedup_lsh_recall_eval", build_recall_sample(spark, sf_dir, args.mult)
+            extra["sample_build_sec"] = round(time.perf_counter() - t0, 2)
+        elif name == _PAGERANK_SHUFFLE:
             # the size-conditional graph strategy's big-graph path, forced
             # by dropping the broadcast bound to 1 (round-9 verdict item 5):
             # every rank join runs as the co-partitioned shuffle join the
             # docstring describes — the plan a billion-node graph would get
-            prev = os.environ.get("SPARK_GRAFT_GRAPH_BCAST_MAX")
-            os.environ["SPARK_GRAFT_GRAPH_BCAST_MAX"] = "1"
-            try:
-                fn = REGISTRY["pagerank_trade_graph"].fn
-                run_once(fn)
-                best, n = float("inf"), 0
-                for _ in range(args.runs):
-                    t0 = time.perf_counter()
-                    n = run_once(fn)
-                    best = min(best, time.perf_counter() - t0)
-            finally:
-                if prev is None:
-                    os.environ.pop("SPARK_GRAFT_GRAPH_BCAST_MAX", None)
-                else:
-                    os.environ["SPARK_GRAFT_GRAPH_BCAST_MAX"] = prev
-            total += best
-            queries[name] = {"rows": n, "sec": round(best, 2)}
-            print(json.dumps({"query": name, **queries[name]}))
-            continue
-        fn = REGISTRY[name].fn
-        run_once(fn)  # warm (codegen/JIT), same protocol as bench.py
-        best, n = float("inf"), 0
-        for _ in range(args.runs):  # best-of-N: local JVM noise is ±10-50% under load
-            t0 = time.perf_counter()
-            n = run_once(fn)
-            best = min(best, time.perf_counter() - t0)
+            query, env = "pagerank_trade_graph", {"SPARK_GRAFT_GRAPH_BCAST_MAX": "1"}
+        fn = REGISTRY[query].fn
+        with mock.patch.dict(os.environ, env):
+            meter.run(fn, in_dir, sink)  # warm (codegen/JIT), same protocol as bench.py
+            # best-of-N: local JVM noise is ±10-50% under load
+            runs = [meter.run(fn, in_dir, sink) for _ in range(args.runs)]
+        best = min(r.wall for r in runs)
         total += best
-        queries[name] = {"rows": n, "sec": round(best, 2)}
-        print(json.dumps({"query": name, "rows": n, "sec": round(best, 2)}))
+        queries[name] = {"rows": runs[-1].rows, "sec": round(best, 2), **extra}
+        if name == _SAMPLED_RECALL:
+            row = spark.read.parquet(sink).collect()[0]  # 1-row output
+            queries[name].update(
+                n_exact=row.n_exact, n_lsh=row.n_lsh, n_common=row.n_common, recall=row.recall
+            )
+        print(json.dumps({"query": name, **queries[name]}))
     # Per-query drift gate vs the previous recorded artifact (round-10
     # verdict item 5 — the bench.py move applied to the smokes): flag
     # everything >1.5x its prior reading so a 4x run-variance outlier like

@@ -27,11 +27,12 @@ import argparse
 import sys
 import time
 import traceback
+from pathlib import Path
 
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, ".")
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from map_reduce485_spark import get_spark
 from map_reduce485_spark.catalog import TABLES, table_path
@@ -66,6 +67,7 @@ def canon_frame(pdf: pd.DataFrame) -> list[tuple]:
 
 
 def open_oracle(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    """A DuckDB connection with one view per catalog table at ``sf_dir``."""
     con = duckdb.connect()
     for t in TABLES:
         con.execute(
