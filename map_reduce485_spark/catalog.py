@@ -15,6 +15,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from map_reduce485_spark.session import tune_session
+
 TABLES = (
     "region",
     "nation",
@@ -37,44 +39,12 @@ def table_path(sf_dir: str, name: str) -> str:
     return f"{sf_dir.rstrip('/')}/{name}.parquet"
 
 
-# Sessions already tuned by _tune_session.  Keyed by id() but holding a
-# strong reference to the session: a bare id-set could false-hit if a stopped
-# session were garbage-collected and a new one reused its id (silently
-# skipping the UTC timezone the oracles depend on); pinning the object makes
-# id reuse impossible while the entry exists, and the identity check guards
-# the hash-collision-free lookup.
-_TUNED: dict[int, SparkSession] = {}
-
-
-def _tune_session(spark: SparkSession) -> None:
-    """Apply runtime-settable SQL confs to whatever session the harness hands
-    us.  The driver constructs a *plain* SparkSession (200 shuffle partitions,
-    10 MB broadcast threshold); on local[32] over test-SF data that default
-    multiplies pure task-scheduling overhead across every one of the ~106 gate
-    queries.  These are exactly the knobs `session.get_spark` sets at build
-    time — mirrored here so correctness/bench behavior does not depend on who
-    built the session.  All of them are runtime-settable SQL confs.
-    """
-    if _TUNED.get(id(spark)) is spark:
-        return
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    # timestamp formatting must agree with the (timezone-naive) DuckDB oracle
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.shuffle.partitions", str(max(cpus, 8)))
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-    spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
-    _TUNED[id(spark)] = spark
-
-
 # (session id, sf_dir, table) → (session, cached DataFrame).  The
 # correctness gate runs ~117 queries over the same ten small tables; caching
 # the scans turns ~150 repeated parquet reads into in-memory columnar scans.
-# The session rides along in the entry for the same reason as _TUNED: a
-# cached DataFrame bound to a dead session must never be returned to a new
-# session that happens to reuse its id.  Opt-out via
+# The session rides along in the entry for the same reason as
+# `session._TUNED`: a cached DataFrame bound to a dead session must never be
+# returned to a new session that happens to reuse its id.  Opt-out via
 # SPARK_GRAFT_CACHE_TABLES=0 (bench.py does, so measured numbers include the
 # real scan).  At production scale this maps to the standard warm-table
 # pattern (`spark.catalog.cacheTable` on dims that fit executor memory).
@@ -88,7 +58,7 @@ def _cache_enabled() -> bool:
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; known: {TABLES}")
-    _tune_session(spark)
+    tune_session(spark)
     key = (id(spark), sf_dir.rstrip("/"), name)
     if _cache_enabled() and key in _TABLE_CACHE:
         owner, df = _TABLE_CACHE[key]
@@ -113,8 +83,8 @@ def _load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
       (truncating integer division — the same ns→us truncation DuckDB
       applies; double math would lose precision above 2^53 ns).
     - MICROS (no tz): arrives as TIMESTAMP_NTZ; cast to the session-local
-      TIMESTAMP (session tz is pinned UTC by `_tune_session`) so downstream
-      window/date math sees the identical dtype either way."""
+      TIMESTAMP (session tz is pinned UTC by `session._sql_confs`) so
+      downstream window/date math sees the identical dtype either way."""
     from pyspark.sql import functions as F
     from pyspark.sql.types import LongType
 

@@ -31,6 +31,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from map_reduce485_spark.queries._util import cache_scoped, release
+
 # initial symbol string: double-space-joined characters with sentinels
 _SYM_INIT = (
     "'  ' || concat_ws('  ', transform(sequence(1, length(word)),"
@@ -65,12 +67,15 @@ def bpe_train(
     a cached barrier so large-k training stays O(k·stride) work with a
     bounded plan (branch factor is 1, so the kcore-style exponential
     planning growth does not apply — the stride only bounds recompute and
-    plan LENGTH).
+    plan LENGTH).  A new barrier is filled by the next step's pair-count
+    collect, which scans all of it; only then is the generation it replaces
+    (the previous barrier, or `base`) released, so no extra job runs.
+    Every cache is released before returning.
     """
     _LINEAGE_STRIDE = 8
-    base = words.select(F.expr(_SYM_INIT).alias("s"), "freq").cache()
-    sym = base
-    barrier: DataFrame | None = None  # the extra cached generation, if any
+    base = cache_scoped(words.select(F.expr(_SYM_INIT).alias("s"), "freq"))
+    sym = barrier = base  # barrier: the cached root of sym's chain
+    replaced: DataFrame | None = None  # the barrier before, freed once it fills
     out: list[tuple[int, str, str, int]] = []
     for step in range(1, n_merges + 1):
         pairs = sym.select(
@@ -83,6 +88,9 @@ def bpe_train(
             .limit(1)
             .collect()
         )
+        if replaced is not None:
+            release(replaced)
+            replaced = None
         if not best:
             break
         pair, freq = best[0].pair, int(best[0].f)
@@ -95,15 +103,9 @@ def bpe_train(
             "freq",
         )
         if step % _LINEAGE_STRIDE == 0:
-            new_barrier = sym.cache()
-            # materialize the new barrier BEFORE dropping the old one, or
-            # the next collect would recompute the whole chain from base
-            new_barrier.count()
-            if barrier is not None:
-                barrier.unpersist()
-            barrier = new_barrier
-            sym = new_barrier
-    base.unpersist()
-    if barrier is not None:
-        barrier.unpersist()
+            replaced, barrier = barrier, cache_scoped(sym)
+            sym = barrier
+    release(barrier)
+    if replaced is not None:
+        release(replaced)
     return out

@@ -33,7 +33,7 @@ from pyspark.sql import functions as F
 from map_reduce485_spark.queries._util import (
     cache_scoped,
     checkpoint_scoped,
-    release_checkpoint,
+    release,
 )
 
 
@@ -123,7 +123,7 @@ def star_components(
             and stepped.subtract(edges).limit(1).count() == 0
         )
         # the previous generation is fully consumed — free its storage now
-        release_checkpoint(edges)
+        release(edges)
         edges = stepped
         if same:
             break

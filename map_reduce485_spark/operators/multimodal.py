@@ -5,11 +5,12 @@ alongside.  Decode / feature-extract / resize / frame-sample run as
 Arrow-batched Pandas UDFs via `mapInPandas` — one Python process per
 executor core, whole Arrow record batches per call, never per-row Python.
 
-The container has no image/audio codec libraries, so the real decoders
-raise `NotImplementedError` behind an import-try; a deterministic fake
-(`fake_decode_image_meta`) exercises the identical plumbing and is what the
-oracle-checked query uses.  Swapping in a real codec changes ONE function
-body and nothing about the distributed plan.
+No image/audio/video codec is a dependency.  Decode, resize, frame-sample
+and audio-feature extraction are deterministic fakes (`fake_*`) that
+exercise the real plumbing and are what the oracle-checked queries use;
+swapping in a real codec changes ONE function body and nothing about the
+distributed plan.  The codec-free operators (`byte_histogram`,
+`audio_rms_features`, `image_ahash`, ...) do real content math.
 """
 
 from __future__ import annotations
@@ -17,23 +18,6 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import pandas as pd
-
-try:  # real codec path — absent in this environment by design
-    from PIL import Image  # noqa: F401
-
-    _HAS_PIL = True
-except ImportError:
-    _HAS_PIL = False
-
-
-def decode_image_meta(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Real image decode (requires Pillow — STUB: not available here)."""
-    if not _HAS_PIL:
-        raise NotImplementedError(
-            "image codec not available in this environment; "
-            "use fake_decode_image_meta for the verified plumbing path"
-        )
-    raise NotImplementedError("real decode intentionally left to deployment environments")
 
 
 def fake_decode_image_meta(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -56,16 +40,6 @@ def fake_decode_image_meta(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataF
                 "mode": "RGB",
             }
         )
-
-
-def frame_sample_stub(payload: bytes, every_n: int = 30) -> list[bytes]:
-    """Video frame sampling (STUB — no video codec in this environment)."""
-    raise NotImplementedError("video codec not available in this environment")
-
-
-def audio_features_stub(payload: bytes, sample_rate: int = 16_000) -> dict:
-    """Audio feature extraction (STUB — no audio codec in this environment)."""
-    raise NotImplementedError("audio codec not available in this environment")
 
 
 # -- deterministic-fake pipelines (real mapInPandas plumbing, stub math) ----
@@ -176,7 +150,7 @@ def fake_audio_features(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFram
 def byte_histogram(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     """REAL feature math over binary payloads (not a stub): 16-bucket byte
     histogram (high nibble) per payload, fully vectorized across the Arrow
-    batch with numpy — no codec needed, so unlike the decode stubs this is
+    batch with numpy — no codec needed, so unlike the decode fakes this is
     genuine content math verified byte-exactly end to end.
 
     One `np.frombuffer` over the batch's concatenated payloads + a single

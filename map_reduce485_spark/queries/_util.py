@@ -6,6 +6,9 @@ string-formatted timestamps, deterministic top-k tiebreaks.
 
 from __future__ import annotations
 
+import shutil
+import tempfile
+
 from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
@@ -17,13 +20,14 @@ def T(spark: SparkSession, sf_dir: str, *names: str) -> list[DataFrame]:
     return [load_table(spark, sf_dir, n) for n in names]
 
 
-# DataFrames cached by query builders in this process, awaiting release.
-# Query-scoped caches can't unpersist inside the builder (the caller hasn't
-# collected the returned plan yet), so multi-query sessions — the driver gate,
-# verify_local, plan_audit, bench, pytest — call release_scoped_caches()
-# BETWEEN queries instead (round-4 verdict item 7: a 187-query session must
-# not accumulate executor storage).
-_SCOPED_CACHES: list[DataFrame] = []
+# Storage that query builders in this process pinned, awaiting release: a
+# cache_scoped frame, the persisted RDD under a checkpoint_scoped frame, or a
+# scratch_dir_scoped directory.  A builder can't free it itself (the caller
+# hasn't collected the returned plan yet), so multi-query sessions — the
+# driver gate, verify_local, plan_audit, bench, pytest — call
+# release_scoped_caches() BETWEEN queries instead (round-4 verdict item 7: a
+# 187-query session must not accumulate executor storage or temp files).
+_SCOPED: list[object] = []
 
 
 def _plan_is_cached(df: DataFrame) -> bool:
@@ -52,37 +56,12 @@ def cache_scoped(df: DataFrame) -> DataFrame:
     """
     if not _plan_is_cached(df):
         df.cache()
-        _SCOPED_CACHES.append(df)
+        _SCOPED.append(df)
     return df
 
 
-def release_scoped_caches() -> int:
-    """Unpersist every query-scoped cache registered since the last release.
-
-    Returns the number released.  Blocking=False: eviction proceeds async so
-    the next query isn't stalled behind storage cleanup.
-    """
-    n = 0
-    while _SCOPED_CACHES:
-        df = _SCOPED_CACHES.pop()
-        try:
-            df.unpersist()
-            n += 1
-        except Exception:  # session already stopped — nothing to release
-            pass
-    n += release_scoped_checkpoints()
-    return n
-
-
-# (SparkContext, rdd_id) pairs for localCheckpoint storage awaiting release —
-# the checkpoint twin of _SCOPED_CACHES (checkpointed data lives as persisted
-# RDDs, not CacheManager entries, so DataFrame.unpersist cannot reach it).
-_SCOPED_CHECKPOINTS: list[tuple[object, int]] = []
-
-
 def checkpoint_scoped(df: DataFrame) -> DataFrame:
-    """Eager ``localCheckpoint`` with the storage handle registered for the
-    standard scope-release hooks.
+    """Eager ``localCheckpoint`` with its storage registered for release.
 
     Use INSTEAD OF :func:`cache_scoped` inside iterative loops whose round
     plan references the previous round's frame more than once: caching cuts
@@ -95,59 +74,77 @@ def checkpoint_scoped(df: DataFrame) -> DataFrame:
     round-1 cost.
 
     Trade-off vs cache_scoped: the data is pinned as a persisted RDD
-    (MEMORY_AND_DISK — spills, never OOMs) and recomputation on executor
-    loss is impossible (irrelevant in local mode; on a cluster, a lost
-    checkpoint fails the query instead of recomputing — acceptable for
-    intra-query round state, same stance as Spark's own
-    ``GraphX``/``ALS`` checkpoint usage).  Release goes through
-    :func:`release_scoped_caches`, and callers that drop a generation
-    eagerly (two-generation loops) can call the returned frame's
-    ``rdd``-level release via :func:`release_checkpoint`."""
+    (MEMORY_AND_DISK — spills, never OOMs) and cannot be recomputed.  On a
+    cluster a lost checkpoint fails the query instead of recomputing
+    (acceptable for intra-query round state, the stance of Spark's own
+    ``GraphX``/``ALS`` checkpoint usage), and once :func:`release` or
+    :func:`release_scoped_caches` frees it, the returned frame and every
+    frame built on it are DEAD, not merely uncached: a job that has to read
+    them raises (a task failure over the missing checkpoint blocks)."""
     out = df.localCheckpoint(eager=True)
-    # the checkpointed plan is a LogicalRDD over exactly the persisted RDD
-    # this call materialized — never an RDD another thread persisted
-    rid = int(out._jdf.logicalPlan().rdd().id())
-    _SCOPED_CHECKPOINTS.append((df.sparkSession.sparkContext, rid))
-    out._mr485_ckpt_ids = [rid]  # for eager two-generation release
+    _SCOPED.append(_checkpoint_rdd(out))
     return out
 
 
-def release_scoped_checkpoints() -> int:
-    """Release every scoped localCheckpoint's persisted RDD storage."""
+def scratch_dir_scoped(prefix: str) -> str:
+    """A fresh temp directory, removed by :func:`release_scoped_caches`.
+
+    For builders that land files (pipe jobs, streaming sinks and
+    checkpoints) and return a frame that reads them: like a checkpoint
+    frame, such a frame is dead after release."""
+    path = tempfile.mkdtemp(prefix=prefix)
+    _SCOPED.append(path)
+    return path
+
+
+def _checkpoint_rdd(df: DataFrame):
+    """The persisted RDD under a checkpoint frame, else None.  A checkpoint
+    frame's plan is a LogicalRDD over exactly the RDD its localCheckpoint
+    materialized — never an RDD another thread persisted."""
+    plan = df._jdf.logicalPlan()
+    return plan.rdd() if plan.getClass().getSimpleName() == "LogicalRDD" else None
+
+
+def _free(handle: object) -> None:
+    if isinstance(handle, str):
+        shutil.rmtree(handle, ignore_errors=True)
+    elif isinstance(handle, DataFrame):
+        handle.unpersist()
+    else:  # a checkpoint's JVM RDD; DataFrame.unpersist cannot reach it
+        handle.unpersist(False)
+
+
+def release(df: DataFrame) -> None:
+    """Free the storage of ONE scoped frame now — its checkpoint RDD or its
+    cache — e.g. generation r-1 of a loop once generation r is materialized.
+
+    A released cache recomputes from lineage if used again; a released
+    checkpoint frame is dead (see :func:`checkpoint_scoped`).  The frame
+    stays registered: unpersisting twice is a no-op, so the scope release
+    stays the backstop without any bookkeeping here."""
+    rdd = _checkpoint_rdd(df)
+    _free(df if rdd is None else rdd)
+
+
+def release_scoped_caches() -> int:
+    """Free everything registered since the last release: unpersist the
+    scoped caches and checkpoints, remove the scratch directories.
+
+    Returns the number of handles released.  Every frame a builder returned
+    over a checkpoint or a scratch directory is dead afterwards (a job that
+    reads it raises), so collect results before releasing.  Unpersist is
+    non-blocking: eviction proceeds async so the next query isn't stalled
+    behind storage cleanup.
+    """
     n = 0
-    while _SCOPED_CHECKPOINTS:
-        sc, rid = _SCOPED_CHECKPOINTS.pop()
-        n += 1 if _unpersist_rdd(sc, rid) else 0
+    while _SCOPED:
+        handle = _SCOPED.pop()
+        try:
+            _free(handle)
+            n += 1
+        except Exception:  # session already stopped — nothing to release
+            pass
     return n
-
-
-def release_checkpoint(df: DataFrame) -> None:
-    """Eagerly release ONE checkpoint_scoped frame's storage (two-generation
-    loops: call on generation r-1 once generation r is materialized).
-    The scope hooks remain the backstop — ids released here are also
-    dropped from the pending list so the hook doesn't double-release."""
-    ids = getattr(df, "_mr485_ckpt_ids", None)
-    if not ids:
-        return
-    sc = df.sparkSession.sparkContext
-    for rid in ids:
-        _unpersist_rdd(sc, rid)
-    _SCOPED_CHECKPOINTS[:] = [
-        (s, r) for (s, r) in _SCOPED_CHECKPOINTS if not (s is sc and r in set(ids))
-    ]
-    df._mr485_ckpt_ids = []
-
-
-def _unpersist_rdd(sc, rid: int) -> bool:
-    try:
-        jmap = sc._jsc.getPersistentRDDs()
-        jrdd = jmap.get(rid)
-        if jrdd is not None:
-            jrdd.unpersist(False)
-            return True
-    except Exception:
-        pass
-    return False
 
 
 def _order_cols(order_by: list[str | Column]) -> list[Column]:
@@ -559,8 +556,6 @@ def land_parquet(df: DataFrame, sf_dir: str, table: str, n_files: int = 4) -> st
     """
     import hashlib
     import os
-    import shutil
-    import tempfile
     from pathlib import Path
 
     src = Path(sf_dir) / f"{table}.parquet"

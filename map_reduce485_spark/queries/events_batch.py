@@ -15,7 +15,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from map_reduce485_spark.queries import query
-from map_reduce485_spark.queries._util import T, distributed_prefix_sum, fmt_ts
+from map_reduce485_spark.queries._util import (
+    T,
+    distributed_prefix_sum,
+    fmt_ts,
+    scratch_dir_scoped,
+)
 
 
 @query(
@@ -546,8 +551,6 @@ def streaming_continuous_aggregate_gate(spark: SparkSession, sf_dir: str) -> Dat
     a previously-drained file's max ts — real backfills are time-ordered);
     with time-ordered arrival the production default ('1 hour') bounds
     state exactly as in `stream_tumbling_counts`."""
-    import tempfile
-
     from map_reduce485_spark.streaming.jobs import (
         read_events_stream,
         run_continuous_aggregate,
@@ -556,7 +559,7 @@ def streaming_continuous_aggregate_gate(spark: SparkSession, sf_dir: str) -> Dat
     (events,) = T(spark, sf_dir, "events")
     landing = _land_events(events, sf_dir)  # shared with the other gates
 
-    work = tempfile.mkdtemp(prefix="mr485_cont_agg_")
+    work = scratch_dir_scoped("mr485_cont_agg_")
     q = run_continuous_aggregate(
         read_events_stream(spark, landing, max_files_per_trigger=1),
         agg_dir=f"{work}/rollup",

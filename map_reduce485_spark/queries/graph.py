@@ -38,7 +38,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from map_reduce485_spark.queries import query
-from map_reduce485_spark.queries._util import T, cache_scoped, checkpoint_scoped
+from map_reduce485_spark.queries._util import T, cache_scoped, checkpoint_scoped, release
 
 
 def _graph_bcast_max() -> int:
@@ -557,8 +557,6 @@ def kcore_peeling(spark: SparkSession, sf_dir: str) -> DataFrame:
     semi-joins, all shuffling on node keys bounded by the live edge list
     — the standard distributed peeling step; each round's survivors are
     cached so lineage stays flat (the `sssp`/`pagerank` discipline)."""
-    from map_reduce485_spark.queries._util import checkpoint_scoped, release_checkpoint
-
     orders, lineitem = T(spark, sf_dir, "orders", "lineitem")
     e0 = (
         orders.join(lineitem, orders.o_orderkey == lineitem.l_orderkey)
@@ -606,10 +604,10 @@ def kcore_peeling(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_nodes = keep.count()
         stats_rows.append((r, n_nodes, n_edges))
         # round r-1's frames are fully consumed — free their storage now
-        release_checkpoint(edges)
-        keep.unpersist()
+        release(edges)
+        release(keep)
         edges = nxt
-    release_checkpoint(edges)
+    release(edges)
     return spark.createDataFrame(
         stats_rows, "round int, n_nodes long, n_edges long"
     )

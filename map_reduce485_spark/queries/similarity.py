@@ -32,7 +32,8 @@ from map_reduce485_spark.queries._util import (
     T,
     cache_scoped,
     checkpoint_scoped,
-    release_checkpoint,
+    release,
+    scratch_dir_scoped,
 )
 
 _DIM = 64
@@ -1135,8 +1136,6 @@ def streaming_ann_index_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket stats; nothing global recomputes.  The stream itself is
     STATELESS (pure map) — statefulness lives entirely in the sink merge,
     the shape that scales to any throughput."""
-    import tempfile
-
     from pyspark.sql import types as ST
 
     from map_reduce485_spark.queries._util import land_parquet
@@ -1160,7 +1159,7 @@ def streaming_ann_index_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("vec_id", _bucket_expr().alias("bucket"))
     )
 
-    work = tempfile.mkdtemp(prefix="mr485_ann_index_")
+    work = scratch_dir_scoped("mr485_ann_index_")
     stats_dir = f"{work}/bucket_stats"
 
     def fold(batch_df: DataFrame, batch_id: int) -> None:
@@ -1650,7 +1649,7 @@ def mmr_diversified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         # eager checkpoint is effectively free.  The previous generation is
         # released as soon as the next one is materialized.
         nxt = checkpoint_scoped(sel.unionAll(pick))
-        release_checkpoint(sel)
+        release(sel)
         sel = nxt
     return sel.select(
         "query_id", "cid", "pick_rank", F.round("score", 6).alias("score")

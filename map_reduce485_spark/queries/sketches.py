@@ -344,10 +344,6 @@ def _cms_pos_spark(i: int, key: str) -> str:
     return _spark_pos(i, key, m=_CMS_W)
 
 
-def _cms_pos_duck(i: int, key: str) -> str:
-    return _duck_pos(i, key, m=_CMS_W)
-
-
 _CMS_BUILD_ORACLE = f"""
 WITH pos AS (
   SELECT i,

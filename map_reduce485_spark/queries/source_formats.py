@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from map_reduce485_spark.queries import query
-from map_reduce485_spark.queries._util import T as tables
+from map_reduce485_spark.queries._util import T as tables, scratch_dir_scoped
 from map_reduce485_spark.sources.io import read_csv, read_json
 
 
@@ -797,7 +797,6 @@ def streaming_python_source_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact integer sum.  Checkpoint is process-unique, so every invocation
     replays the full schedule deterministically."""
     import os
-    import tempfile
 
     from map_reduce485_spark.sources.pyds import (
         STREAM_N,
@@ -806,7 +805,7 @@ def streaming_python_source_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     register(spark)
-    ckpt = tempfile.mkdtemp(prefix="mr485_pyss_ckpt_")
+    ckpt = scratch_dir_scoped("mr485_pyss_ckpt_")
     agg = (
         spark.readStream.format("mr485_synthetic_stream")
         .load()

@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 from map_reduce485_spark.queries import query
-from map_reduce485_spark.queries._util import T
+from map_reduce485_spark.queries._util import T, scratch_dir_scoped
 
 
 def _make_value_cents():
@@ -110,13 +110,12 @@ def mapreduce_wordcount_pipe(spark: SparkSession, sf_dir: str) -> DataFrame:
     the reference's own canonical job (submit.py:40-49) running under its
     exact contract, producing identical counts to the DataFrame wordcount.
     """
-    import tempfile
     from pathlib import Path
 
     from map_reduce485_spark.mapreduce import JobRequest, MapReduceJob
 
     (docs,) = T(spark, sf_dir, "documents")
-    work = Path(tempfile.mkdtemp(prefix="mr485_wc_"))
+    work = Path(scratch_dir_scoped("mr485_wc_"))
     in_dir = work / "input"
     # land the corpus as line-oriented text (the reference's only format)
     docs.select("text").write.mode("overwrite").text(str(in_dir))

@@ -38,3 +38,48 @@ def test_bpe_stops_when_no_pairs_left(spark):
     # single-char words produce no pairs: training stops early, no crash
     words = spark.createDataFrame([("a", 5), ("b", 3)], "word string, freq long")
     assert bpe_train(spark, words, 3) == []
+
+
+def _sequential_bpe(vocab: dict[str, int], n_merges: int) -> list[tuple[int, str, str, int]]:
+    """Plain-Python BPE: frequency-weighted overlapping pair counts, ties
+    to the smallest 'x y' string, then one greedy left-to-right merge pass
+    per word."""
+    words = {w: list(w) for w in vocab}
+    rules = []
+    for step in range(1, n_merges + 1):
+        counts: dict[tuple[str, str], int] = {}
+        for w, syms in words.items():
+            for pair in zip(syms, syms[1:]):
+                counts[pair] = counts.get(pair, 0) + vocab[w]
+        if not counts:
+            break
+        (x, y), f = min(counts.items(), key=lambda kv: (-kv[1], f"{kv[0][0]} {kv[0][1]}"))
+        rules.append((step, f"{x} {y}", x + y, f))
+        for w, syms in words.items():
+            merged, i = [], 0
+            while i < len(syms):
+                if i + 1 < len(syms) and (syms[i], syms[i + 1]) == (x, y):
+                    merged.append(x + y)
+                    i += 2
+                else:
+                    merged.append(syms[i])
+                    i += 1
+            words[w] = merged
+    return rules
+
+
+def test_bpe_past_stride_barriers_matches_sequential(spark):
+    # 17 merges cross the stride-8 lineage barrier twice (steps 8 and 16),
+    # so both the base->barrier and barrier->barrier hand-offs run
+    vocab = {
+        "lowest": 5, "lower": 6, "newer": 4, "wider": 3, "newest": 2,
+        "low": 7, "widest": 2, "banana": 3, "bandana": 2, "aaaa": 1,
+    }
+    expected = _sequential_bpe(vocab, 17)
+    assert len(expected) == 17
+    words = spark.createDataFrame(list(vocab.items()), "word string, freq long")
+    jsc = spark.sparkContext._jsc
+    persisted = jsc.getPersistentRDDs().size()
+    assert bpe_train(spark, words, 17) == expected
+    # every barrier and the base table are released before returning
+    assert jsc.getPersistentRDDs().size() <= persisted

@@ -429,10 +429,7 @@ def test_scoped_caches_release_storage(spark):
     and require (a) the scoped registry is drained, (b) no NEW persistent
     RDDs remain vs the baseline, (c) re-invoking the same query re-caches
     cleanly (CacheManager-idempotent, no 'already cached' double entry)."""
-    from map_reduce485_spark.queries._util import (
-        _SCOPED_CACHES,
-        release_scoped_caches,
-    )
+    from map_reduce485_spark.queries._util import _SCOPED, release_scoped_caches
     from map_reduce485_spark.queries.dedup import (
         dedup_minhash_lsh,
         dedup_ngram_jaccard,
@@ -451,9 +448,9 @@ def test_scoped_caches_release_storage(spark):
     # dedup_ngram_jaccard still registers the scoped shingle cache
     dedup_minhash_lsh(spark, sf).count()
     dedup_ngram_jaccard(spark, sf).count()
-    assert len(_SCOPED_CACHES) >= 1  # ngram's shingle cache registered once
+    assert len(_SCOPED) >= 1  # ngram's shingle cache registered once
     n = release_scoped_caches()
-    assert n >= 1 and not _SCOPED_CACHES
+    assert n >= 1 and not _SCOPED
 
     # unpersist is async (blocking=False); poll briefly for the cleanup
     import time
@@ -467,7 +464,7 @@ def test_scoped_caches_release_storage(spark):
     # idempotent re-invocation after release: caches again, exactly once
     dedup_ngram_jaccard(spark, sf).count()
     dedup_ngram_jaccard(spark, sf).count()
-    assert len(_SCOPED_CACHES) == 1
+    assert len(_SCOPED) == 1
     release_scoped_caches()
 
 
@@ -478,7 +475,7 @@ def test_checkpoint_release_spares_concurrent_caches(spark):
     import threading
 
     from map_reduce485_spark.queries._util import (
-        _SCOPED_CHECKPOINTS,
+        _SCOPED,
         checkpoint_scoped,
         release_scoped_caches,
     )
@@ -503,8 +500,10 @@ def test_checkpoint_release_spares_concurrent_caches(spark):
             out = checkpoint_scoped(
                 spark.range(500 + i).selectExpr("id % 11 AS k").distinct()
             )
-            assert out._mr485_ckpt_ids == [int(out._jdf.logicalPlan().rdd().id())]
-            ckpt_ids.update(out._mr485_ckpt_ids)
+            # the registered handle is the RDD under the frame's own plan
+            rid = int(_SCOPED[-1].id())
+            assert rid == int(out._jdf.logicalPlan().rdd().id())
+            ckpt_ids.add(rid)
     finally:
         done.set()
         worker.join(timeout=120)
@@ -520,13 +519,118 @@ def test_checkpoint_release_spares_concurrent_caches(spark):
         assert foreign_ids and not foreign_ids & ckpt_ids
         release_scoped_caches()
         left = {int(i) for i in sc._jsc.getPersistentRDDs().keySet().toArray()}
-        assert not _SCOPED_CHECKPOINTS
+        assert not _SCOPED
         assert foreign_ids <= left, "another thread's cache was released"
         assert not left & ckpt_ids, "checkpoint storage left after release"
     finally:
         for df in foreign:
             df.unpersist()
 
+
+
+def _wait_persisted_at_most(spark, n: int) -> int:
+    """Persisted-RDD count once it drops to ``n`` (or after ~10 s)."""
+    import time
+
+    jsc = spark.sparkContext._jsc
+    for _ in range(50):
+        if jsc.getPersistentRDDs().size() <= n:
+            break
+        time.sleep(0.2)
+    return jsc.getPersistentRDDs().size()
+
+
+def test_scoped_storage_released_by_iterative_builders(spark):
+    """Fast variant of test_scoped_caches_release_storage over the builders
+    that cache, checkpoint and release generations mid-query: after one
+    release, no scoped storage is left and the persisted-RDD count is back
+    at its baseline."""
+    from map_reduce485_spark.catalog import TABLES, load_table
+    from map_reduce485_spark.queries._util import _SCOPED, release_scoped_caches
+
+    for t in TABLES:  # the long-lived table caches are not query-scoped
+        load_table(spark, SF_SMOKE, t).count()
+    release_scoped_caches()
+    baseline = spark.sparkContext._jsc.getPersistentRDDs().size()
+    for name in (
+        "dedup_ngram_jaccard",
+        "dedup_clusters_star",
+        "kcore_peeling",
+        "bpe_train_merges",
+    ):
+        assert REGISTRY[name].fn(spark, SF_SMOKE).collect()
+    release_scoped_caches()
+    assert not _SCOPED
+    assert _wait_persisted_at_most(spark, baseline) <= baseline
+
+
+def test_release_unpersists_cache_scoped_frame(spark):
+    from map_reduce485_spark.queries._util import (
+        _plan_is_cached,
+        cache_scoped,
+        release,
+        release_scoped_caches,
+    )
+
+    df = cache_scoped(spark.range(4321).selectExpr("id * 3 AS x"))
+    assert df.count() == 4321 and _plan_is_cached(df)
+    release(df)
+    assert not _plan_is_cached(df)
+    assert df.count() == 4321  # a released cache just recomputes
+    release_scoped_caches()
+
+
+def test_released_checkpoint_frame_is_dead(spark):
+    """The release contract: a checkpoint frame, and every frame built on
+    it, raises after release instead of silently recomputing."""
+    import time
+
+    from py4j.protocol import Py4JJavaError
+
+    from map_reduce485_spark.queries._util import (
+        checkpoint_scoped,
+        release,
+        release_scoped_caches,
+    )
+
+    def raises(df) -> bool:
+        # unpersist is non-blocking: the blocks go shortly after release
+        for _ in range(50):
+            try:
+                df.collect()
+            except Py4JJavaError:
+                return True
+            time.sleep(0.2)
+        return False
+
+    base = spark.range(2000).selectExpr("id % 13 AS k").distinct()
+    early = checkpoint_scoped(base)
+    assert early.count() == 13
+    release(early)
+    assert raises(early)
+
+    drained = checkpoint_scoped(base.selectExpr("k + 1 AS k"))
+    derived = drained.filter("k > 1")
+    assert derived.count() == 12
+    release_scoped_caches()
+    assert raises(derived)
+
+
+def test_scratch_dir_removed_on_release(spark):
+    """A builder's per-call work dir lives until the scope is released."""
+    from pathlib import Path
+    from urllib.parse import urlparse
+
+    from map_reduce485_spark.queries._util import release_scoped_caches
+
+    release_scoped_caches()
+    df = REGISTRY["mapreduce_wordcount_pipe"].fn(spark, SF_SMOKE)
+    assert df.collect()
+    # part files sit at <work>/out/part-*
+    work = Path(urlparse(df.inputFiles()[0]).path).parent.parent
+    assert work.name.startswith("mr485_wc_") and work.is_dir()
+    release_scoped_caches()
+    assert not work.exists()
 
 # -- exact-moment statistics (round 5 continuation) --------------------------
 

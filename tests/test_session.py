@@ -1,0 +1,47 @@
+"""Session tuning: one list of SQL confs, and explicit arguments win.
+
+Runs in a subprocess so the shared test session's confs are not touched."""
+
+from __future__ import annotations
+
+import os
+import subprocess
+import sys
+from pathlib import Path
+
+from tests.conftest import SF_SMOKE
+
+ROOT = Path(__file__).resolve().parent.parent
+
+
+def test_load_table_keeps_get_spark_partitions():
+    code = (
+        "from map_reduce485_spark import get_spark;"
+        "from map_reduce485_spark.catalog import load_table;"
+        "s = get_spark('conf_proc', cpus=2, shuffle_partitions=2);"
+        f"load_table(s, {SF_SMOKE!r}, 'region');"
+        "print('BUILT', s.conf.get('spark.sql.shuffle.partitions'));"
+        # a session get_spark did not tune is tuned on first load
+        "p = s.newSession(); p.conf.set('spark.sql.session.timeZone', 'America/Chicago');"
+        f"load_table(p, {SF_SMOKE!r}, 'region');"
+        "print('PLAIN', p.conf.get('spark.sql.shuffle.partitions'),"
+        " p.conf.get('spark.sql.session.timeZone'))"
+    )
+    env = dict(
+        os.environ,
+        SPARK_GRAFT_CPUS="4",
+        SPARK_GRAFT_DRIVER_MEM="1g",
+        PYTHONPATH=os.pathsep.join(p for p in (str(ROOT), os.environ.get("PYTHONPATH")) if p),
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", code],
+        capture_output=True,
+        text=True,
+        env=env,
+        cwd=ROOT,
+        timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    lines = out.stdout.splitlines()
+    assert "BUILT 2" in lines
+    assert "PLAIN 8 UTC" in lines
