@@ -65,8 +65,51 @@ def send_message(port: int, msg: dict, host: str = "127.0.0.1", timeout: float =
 # ---------------------------------------------------------------------------
 
 
+_JOB_FIELDS = ("input_directory", "output_directory", "mapper_executable", "reducer_executable")
+
+
+def dispatch(queue, line: bytes | str) -> dict:
+    """The manager's reply to one request line.  Bad input — not JSON, not
+    an object, a missing field, an unknown job — gets ``{"error": ...}``
+    instead of an exception, so the client always hears back."""
+    try:
+        msg = json.loads(line)
+    except ValueError:
+        return {"error": "invalid json"}
+    if not isinstance(msg, dict):
+        return {"error": "request must be a JSON object"}
+    mt = msg.get("message_type")
+    if mt == "new_manager_job":
+        from map_reduce485_spark.mapreduce.job import JobRequest
+
+        missing = [k for k in _JOB_FIELDS if k not in msg]
+        if missing:
+            return {"error": f"new_manager_job missing {', '.join(missing)}"}
+        try:
+            n_map, n_red = int(msg.get("num_mappers", 2)), int(msg.get("num_reducers", 2))
+        except (TypeError, ValueError):
+            return {"error": "num_mappers and num_reducers must be integers"}
+        request = JobRequest(
+            **{k: msg[k] for k in _JOB_FIELDS}, num_mappers=n_map, num_reducers=n_red
+        )
+        return {"job_id": queue.submit(request)}
+    if mt == "job_status":
+        try:
+            jid = int(msg["job_id"])
+        except (KeyError, TypeError, ValueError):
+            jid = None
+        if jid not in queue.snapshot():
+            return {"error": f"unknown job_id {msg.get('job_id')!r}"}
+        return {"job_id": jid, "status": queue.status(jid), "error": queue.error(jid)}
+    if mt == "status":
+        return {"alive": True, "jobs": queue.snapshot()}
+    if mt == "shutdown":
+        return {"ok": True}
+    return {"error": f"unknown message_type {mt!r}"}
+
+
 def serve(port: int, cpus: int) -> None:
-    from map_reduce485_spark.mapreduce.job import JobQueue, JobRequest
+    from map_reduce485_spark.mapreduce.job import JobQueue
     from map_reduce485_spark.session import get_spark
 
     spark = get_spark("mr485-manager", cpus=cpus)
@@ -77,41 +120,12 @@ def serve(port: int, cpus: int) -> None:
             line = self.rfile.readline()
             if not line:
                 return
-            try:
-                msg = json.loads(line.decode("utf-8"))
-            except ValueError:
-                self._reply({"error": "invalid json"})
-                return
-            mt = msg.get("message_type")
-            if mt == "new_manager_job":
-                job_id = queue.submit(
-                    JobRequest(
-                        input_directory=msg["input_directory"],
-                        output_directory=msg["output_directory"],
-                        mapper_executable=msg["mapper_executable"],
-                        reducer_executable=msg["reducer_executable"],
-                        num_mappers=int(msg.get("num_mappers", 2)),
-                        num_reducers=int(msg.get("num_reducers", 2)),
-                    )
-                )
-                self._reply({"job_id": job_id})
-            elif mt == "job_status":
-                jid = int(msg["job_id"])
-                self._reply(
-                    {"job_id": jid, "status": queue.status(jid), "error": queue.error(jid)}
-                )
-            elif mt == "status":
-                self._reply({"alive": True, "jobs": queue.snapshot()})
-            elif mt == "shutdown":
-                self._reply({"ok": True})
+            reply = dispatch(queue, line)
+            self.wfile.write((json.dumps(reply) + "\n").encode("utf-8"))
+            if reply.get("ok"):  # only a shutdown request is answered "ok"
                 # shutdown() must come from outside the serve_forever thread;
                 # handler threads qualify, but do it async so the reply flushes
                 threading.Thread(target=self.server.shutdown, daemon=True).start()
-            else:
-                self._reply({"error": f"unknown message_type {mt!r}"})
-
-        def _reply(self, obj: dict) -> None:
-            self.wfile.write((json.dumps(obj) + "\n").encode("utf-8"))
 
     class Server(socketserver.ThreadingTCPServer):
         allow_reuse_address = True
@@ -281,6 +295,9 @@ def main(argv: list[str] | None = None) -> int:
             if reply.get("status") in ("succeeded", "failed"):
                 print(json.dumps(reply))
                 return 0 if reply["status"] == "succeeded" else 1
+            if "status" not in reply and reply.get("error"):  # a rejected request
+                print(json.dumps(reply))
+                return 1
             time.sleep(0.25)
         print(json.dumps({"job_id": args.job_id, "status": "timeout"}))
         return 1

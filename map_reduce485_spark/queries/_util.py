@@ -6,8 +6,13 @@ string-formatted timestamps, deterministic top-k tiebreaks.
 
 from __future__ import annotations
 
+import hashlib
+import os
 import shutil
 import tempfile
+import threading
+from pathlib import Path
+from typing import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
@@ -543,46 +548,61 @@ def oracle_fmt_ts(expr: str, alias: str) -> str:
     return f"strftime({expr}, '{ORACLE_TS_FMT}') AS {alias}"
 
 
-def land_parquet(df: DataFrame, sf_dir: str, table: str, n_files: int = 4) -> str:
-    """Land a catalog table as parquet files under /tmp for the streaming
-    gates (the landing-zone ingestion pattern their file sources read).
-
-    The dir tag fingerprints the SOURCE data (file names, sizes, mtimes),
-    not just the path — regenerated source data gets a fresh landing dir
-    instead of a stale replay.  The write goes to a process-unique temp dir
-    and is renamed into place: rename(2) is atomic, so two first-run
-    processes cannot race each other's half-written files (the loser
-    removes its own copy).
-    """
-    import hashlib
-    import os
-    from pathlib import Path
-
+def source_fingerprint(sf_dir: str, table: str) -> str:
+    """12 hex digits of md5 over the source table's path and each of its
+    files' name, size and mtime: regenerated source data gets a new
+    fingerprint, so a dir named after it is never a stale replay."""
     src = Path(sf_dir) / f"{table}.parquet"
     files = sorted(p for p in src.rglob("*") if p.is_file()) if src.is_dir() else [src]
     h = hashlib.md5(f"{sf_dir}:{table}".encode())
     for f in files:
         st = f.stat()
         h.update(f"{f.name}:{st.st_size}:{st.st_mtime_ns}".encode())
-    landing = Path(tempfile.gettempdir()) / f"mr485_land_{table}_{h.hexdigest()[:12]}"
-    if not (landing / "_SUCCESS").exists():
-        # A landing dir WITHOUT _SUCCESS is a broken leftover (e.g. a crash
-        # mid-write): a good dir only ever appears via the atomic rename
-        # below, _SUCCESS included.  Clear it or the rename would fail
-        # ENOTEMPTY forever and the broken dir would be returned as-is.
-        if landing.exists():
-            shutil.rmtree(landing, ignore_errors=True)
-        tmp = landing.with_name(f"{landing.name}.tmp{os.getpid()}")
-        df.repartition(n_files).write.mode("overwrite").parquet(str(tmp))
+    return h.hexdigest()[:12]
+
+
+def published_dir(name: str, build: Callable[[str], None]) -> str:
+    """``<tempdir>/<name>``, built once by ``build(path)`` and never mutated.
+
+    A complete dir holds ``_SUCCESS``, and it only ever appears by one
+    rename(2) of a finished, process-unique sibling, so neither a crash nor
+    a second process sees half of it (the reference's workers publish
+    their partition files the same way, by a move into the job dir).  A
+    dir WITHOUT ``_SUCCESS`` is a crash leftover: it is cleared, else the
+    rename would fail ENOTEMPTY forever.  ``build`` gets a path that does
+    not exist yet and must create it; if ``build`` raises, its partial
+    output is removed.  ``name`` should embed a :func:`source_fingerprint`
+    of the data the dir is derived from.
+    """
+    final = Path(tempfile.gettempdir()) / name
+    if (final / "_SUCCESS").exists():
+        return str(final)
+    if final.exists():
+        shutil.rmtree(final, ignore_errors=True)
+    tmp = final.with_name(f"{final.name}.tmp{os.getpid()}_{threading.get_ident()}")
+    shutil.rmtree(tmp, ignore_errors=True)  # a dead process's, if the pid is reused
+    try:
+        build(str(tmp))
+        (tmp / "_SUCCESS").touch()
         try:
-            os.rename(tmp, landing)
+            os.rename(tmp, final)
         except OSError:
-            # Either another process won the rename (fine — keep theirs) or
-            # the target is still broken; re-check instead of assuming.
-            shutil.rmtree(tmp, ignore_errors=True)
-            if not (landing / "_SUCCESS").exists():
+            # another process won the rename (keep its copy), or the target
+            # is broken again; re-check instead of assuming
+            if not (final / "_SUCCESS").exists():
                 raise RuntimeError(
-                    f"landing dir {landing} unusable: rename failed and no "
-                    "complete copy exists (concurrent broken leftover?)"
-                )
-    return str(landing)
+                    f"{final} unusable: rename failed and no complete copy exists"
+                ) from None
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)  # already gone if the rename won
+    return str(final)
+
+
+def land_parquet(df: DataFrame, sf_dir: str, table: str) -> str:
+    """Land a catalog table as 4 parquet files for the streaming gates (the
+    landing-zone ingestion pattern their file sources read), once per
+    source fingerprint."""
+    return published_dir(
+        f"mr485_land_{table}_{source_fingerprint(sf_dir, table)}",
+        lambda tmp: df.repartition(4).write.parquet(tmp),
+    )

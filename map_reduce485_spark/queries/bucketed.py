@@ -21,32 +21,22 @@ the final aggregate; none between scans and join).
 
 from __future__ import annotations
 
-import hashlib
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from map_reduce485_spark.operators.bucketing import bucketed_join, write_bucketed
 from map_reduce485_spark.queries import query
-from map_reduce485_spark.queries._util import T, dsum, oracle_dsum
+from map_reduce485_spark.queries._util import (
+    T,
+    dsum,
+    oracle_dsum,
+    published_dir,
+    source_fingerprint,
+)
 
 _N_BUCKETS = 8
-
-
-def _src_fingerprint(sf_dir: str, table: str) -> str:
-    """md5 over the source table's file names/sizes/mtimes (the
-    `_util.land_parquet` keying discipline)."""
-    from pathlib import Path
-
-    src = Path(sf_dir) / f"{table}.parquet"
-    files = sorted(p for p in src.rglob("*") if p.is_file()) if src.is_dir() else [src]
-    h = hashlib.md5(f"{sf_dir}:{table}".encode())
-    for f in files:
-        st = f.stat()
-        h.update(f"{f.name}:{st.st_size}:{st.st_mtime_ns}".encode())
-    return h.hexdigest()[:12]
 
 
 def _ensure_bucketed_facts(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
@@ -55,17 +45,13 @@ def _ensure_bucketed_facts(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     cross-process race: two engines both passing a session-catalog
     `tableExists` check and clobbering one shared path).
 
-    Discipline mirrors `_util.land_parquet`: the data dir is keyed on the
-    source files' fingerprint, written via `saveAsTable` into a
-    process-unique temp location, atomically renamed into place (losers
-    discard their copy), and NEVER mutated again — each session then
-    registers an EXTERNAL bucketed table over the immutable dir with
-    `CREATE TABLE IF NOT EXISTS ... CLUSTERED BY`, which touches only its
-    own catalog.  Table names are fingerprint-scoped, so different scale
-    factors or regenerated source data never collide."""
-    import shutil
-    from pathlib import Path
-
+    The data dir is a `_util.published_dir` keyed on the source files'
+    fingerprint: `saveAsTable` writes it into a process-unique temp
+    location that is renamed into place, and it is NEVER mutated again —
+    each session then registers an EXTERNAL bucketed table over the
+    immutable dir with `CREATE TABLE IF NOT EXISTS ... CLUSTERED BY`, which
+    touches only its own catalog.  Table names are fingerprint-scoped, so
+    different scale factors or regenerated source data never collide."""
     specs = [
         (
             "lineitem",
@@ -81,27 +67,16 @@ def _ensure_bucketed_facts(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
         ),
     ]
     names = []
-    root = Path(tempfile.gettempdir()) / "mr485_bucketed"
     for table, cols, ddl_cols, key in specs:
-        tag = _src_fingerprint(sf_dir, table)
-        t_name = f"b_{table}_{tag}"
-        final = root / t_name
-        if not (final / "_SUCCESS").exists():
-            if final.exists():  # broken leftover: complete dirs have _SUCCESS
-                shutil.rmtree(final, ignore_errors=True)
+        t_name = f"b_{table}_{source_fingerprint(sf_dir, table)}"
+
+        def build(tmp: str) -> None:
             (df,) = T(spark, sf_dir, table)
             tmp_table = f"{t_name}_tmp{os.getpid()}"
-            tmp_path = final.with_name(f"{t_name}.tmp{os.getpid()}")
-            write_bucketed(
-                df.select(*cols), tmp_table, key, _N_BUCKETS, path=str(tmp_path)
-            )
+            write_bucketed(df.select(*cols), tmp_table, key, _N_BUCKETS, path=tmp)
             spark.sql(f"DROP TABLE IF EXISTS {tmp_table}")  # keep the files
-            try:
-                os.rename(tmp_path, final)
-            except OSError:
-                shutil.rmtree(tmp_path, ignore_errors=True)
-                if not (final / "_SUCCESS").exists():
-                    raise RuntimeError(f"bucketed dir {final} unusable after race")
+
+        final = published_dir(f"mr485_bucketed/{t_name}", build)
         if not spark.catalog.tableExists(t_name):
             spark.sql(
                 f"CREATE TABLE IF NOT EXISTS {t_name} ({ddl_cols}) USING PARQUET "

@@ -11,6 +11,8 @@ streaming is north-star surface.
 
 from __future__ import annotations
 
+from pathlib import Path
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -19,6 +21,8 @@ from map_reduce485_spark.queries._util import (
     T,
     distributed_prefix_sum,
     fmt_ts,
+    land_parquet,
+    published_dir,
     scratch_dir_scoped,
 )
 
@@ -244,14 +248,6 @@ FROM events GROUP BY date_trunc('hour', ts)
 """
 
 
-def _land_events(events: DataFrame, sf_dir: str) -> str:
-    """Land the events table for the streaming gates (fingerprint-keyed,
-    atomically published — see `_util.land_parquet`)."""
-    from map_reduce485_spark.queries._util import land_parquet
-
-    return land_parquet(events, sf_dir, "events")
-
-
 def _land_events_with_sentinel(events: DataFrame, landing: str) -> str:
     """Landing dir variant with a single far-future SENTINEL event in its
     own LAST file (strictly later mtime → the file source orders it after
@@ -259,17 +255,10 @@ def _land_events_with_sentinel(events: DataFrame, landing: str) -> str:
     the watermark passes every deadline (session-TTL timeouts, outer-join
     null emission): processing the sentinel jumps the watermark beyond
     every real event's horizon, so availableNow's trailing no-data batches
-    drain all pending state.  Published atomically like `land_parquet`."""
-    import os
-    import shutil
-    from pathlib import Path
+    drain all pending state."""
 
-    ttl_dir = Path(landing + ".ttl")
-    if not (ttl_dir / "_SUCCESS").exists():
-        if ttl_dir.exists():
-            shutil.rmtree(ttl_dir, ignore_errors=True)
-        tmp = ttl_dir.with_name(f"{ttl_dir.name}.tmp{os.getpid()}")
-        events.repartition(4).write.mode("overwrite").parquet(str(tmp))
+    def build(tmp: str) -> None:
+        events.repartition(4).write.parquet(tmp)
         sentinel = events.agg(
             F.lit(-1).cast("bigint").alias("event_id"),
             (F.max("ts") + F.expr("INTERVAL 3700 DAYS")).alias("ts"),
@@ -280,14 +269,21 @@ def _land_events_with_sentinel(events: DataFrame, landing: str) -> str:
         )
         # second write → strictly later mtimes → the file source processes
         # the sentinel file after every real file
-        sentinel.coalesce(1).write.mode("append").parquet(str(tmp))
-        try:
-            os.rename(tmp, ttl_dir)
-        except OSError:
-            shutil.rmtree(tmp, ignore_errors=True)
-            if not (ttl_dir / "_SUCCESS").exists():
-                raise RuntimeError(f"ttl landing dir {ttl_dir} unusable")
-    return str(ttl_dir)
+        sentinel.coalesce(1).write.mode("append").parquet(tmp)
+
+    return published_dir(f"{Path(landing).name}.ttl", build)
+
+
+def _land_events_twice(events: DataFrame, landing: str) -> str:
+    """The landing dir's events delivered twice (two appends of the whole
+    table, two files each), so every key arrives twice: the input of the
+    dedup gates."""
+
+    def build(tmp: str) -> None:
+        events.repartition(2).write.parquet(tmp)
+        events.repartition(2).write.mode("append").parquet(tmp)
+
+    return published_dir(f"{Path(landing).name}.dup2", build)
 
 
 @query("streaming_tumbling_gate", _STREAM_GATE_ORACLE, tags=("events", "streaming"))
@@ -312,7 +308,7 @@ def streaming_tumbling_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     (events,) = T(spark, sf_dir, "events")  # also tunes the session (UTC)
-    landing = _land_events(events, sf_dir)  # shared with the sessionize gate
+    landing = land_parquet(events, sf_dir, "events")  # shared with the sessionize gate
 
     agg = stream_tumbling_counts(read_events_stream(spark, landing))
     name = f"stream_gate_tumbling_{landing.rsplit('_', 1)[-1]}"
@@ -361,7 +357,7 @@ def streaming_sessionize_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     (events,) = T(spark, sf_dir, "events")
-    landing = _land_events(events, sf_dir)  # shared with the tumbling gate
+    landing = land_parquet(events, sf_dir, "events")  # shared with the tumbling gate
 
     sess = stream_sessionize(read_events_stream(spark, landing))
     name = f"stream_gate_sessions_{landing.rsplit('_', 1)[-1]}"
@@ -398,7 +394,7 @@ def streaming_session_ttl_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     (events,) = T(spark, sf_dir, "events")
-    landing = _land_events(events, sf_dir)
+    landing = land_parquet(events, sf_dir, "events")
     ttl_dir = _land_events_with_sentinel(events, landing)
 
     sessions = stream_session_ttl(
@@ -446,7 +442,7 @@ def streaming_custom_state_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     (events,) = T(spark, sf_dir, "events")
-    landing = _land_events(events, sf_dir)  # shared with the other gates
+    landing = land_parquet(events, sf_dir, "events")  # shared with the other gates
 
     totals = stream_user_running_totals(read_events_stream(spark, landing))
     name = f"stream_gate_custom_state_{landing.rsplit('_', 1)[-1]}"
@@ -485,10 +481,6 @@ def streaming_dedup_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     Test watermark is effectively infinite for the same reason as the
     continuous-aggregate gate (randomly-partitioned files); production
     bounds the seen-key state with a real horizon."""
-    import os
-    import shutil
-    from pathlib import Path
-
     from map_reduce485_spark.streaming.jobs import (
         read_events_stream,
         run_to_memory_sink,
@@ -496,19 +488,11 @@ def streaming_dedup_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     (events,) = T(spark, sf_dir, "events")
-    landing = _land_events(events, sf_dir)
-    dup = Path(landing + ".dup2")
-    if not (dup / "_SUCCESS").exists():
-        tmp = dup.with_name(f"{dup.name}.tmp{os.getpid()}")
-        events.repartition(2).write.mode("overwrite").parquet(str(tmp))
-        events.repartition(2).write.mode("append").parquet(str(tmp))
-        try:
-            os.rename(tmp, dup)
-        except OSError:  # another process won the rename; keep theirs
-            shutil.rmtree(tmp, ignore_errors=True)
+    landing = land_parquet(events, sf_dir, "events")
+    dup = _land_events_twice(events, landing)
 
     deduped = stream_dedup_exact(
-        read_events_stream(spark, str(dup), max_files_per_trigger=1),
+        read_events_stream(spark, dup, max_files_per_trigger=1),
         watermark="3650 days",
     )
     name = f"stream_gate_dedup_{landing.rsplit('_', 1)[-1]}"
@@ -557,7 +541,7 @@ def streaming_continuous_aggregate_gate(spark: SparkSession, sf_dir: str) -> Dat
     )
 
     (events,) = T(spark, sf_dir, "events")
-    landing = _land_events(events, sf_dir)  # shared with the other gates
+    landing = land_parquet(events, sf_dir, "events")  # shared with the other gates
 
     work = scratch_dir_scoped("mr485_cont_agg_")
     q = run_continuous_aggregate(
@@ -1267,7 +1251,7 @@ def streaming_interval_join_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     (events,) = T(spark, sf_dir, "events")
-    landing = _land_events(events, sf_dir)
+    landing = land_parquet(events, sf_dir, "events")
     src_v = read_events_stream(spark, landing, max_files_per_trigger=2)
     src_p = read_events_stream(spark, landing, max_files_per_trigger=2)
     joined = stream_view_purchase_join(
@@ -1314,7 +1298,7 @@ def streaming_static_join_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     events, customer = T(spark, sf_dir, "events", "customer")
-    landing = _land_events(events, sf_dir)
+    landing = land_parquet(events, sf_dir, "events")
     src = read_events_stream(spark, landing, max_files_per_trigger=2)
     enriched = (
         src.filter(F.col("event_type") == "purchase")
@@ -1446,7 +1430,7 @@ def streaming_sliding_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     (events,) = T(spark, sf_dir, "events")
-    landing = _land_events(events, sf_dir)
+    landing = land_parquet(events, sf_dir, "events")
     agg = stream_sliding_counts(read_events_stream(spark, landing))
     name = f"stream_gate_sliding_{landing.rsplit('_', 1)[-1]}"
     run_to_memory_sink(agg, name, mode="complete")
@@ -1494,7 +1478,7 @@ def streaming_outer_join_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     (events,) = T(spark, sf_dir, "events")
-    landing = _land_events(events, sf_dir)
+    landing = land_parquet(events, sf_dir, "events")
     ttl_dir = _land_events_with_sentinel(events, landing)
     joined = stream_view_purchase_left_join(
         read_events_stream(spark, ttl_dir, max_files_per_trigger=2),
@@ -1755,10 +1739,6 @@ def streaming_dedup_watermark_gate(spark: SparkSession, sf_dir: str) -> DataFram
     what is being witnessed is the dedup correctness of the OTHER state
     implementation (range-keyed, eviction-capable), through the identical
     contract."""
-    import os
-    import shutil
-    from pathlib import Path
-
     from map_reduce485_spark.streaming.jobs import (
         read_events_stream,
         run_to_memory_sink,
@@ -1766,19 +1746,11 @@ def streaming_dedup_watermark_gate(spark: SparkSession, sf_dir: str) -> DataFram
     )
 
     (events,) = T(spark, sf_dir, "events")
-    landing = _land_events(events, sf_dir)
-    dup = Path(landing + ".dup2")
-    if not (dup / "_SUCCESS").exists():
-        tmp = dup.with_name(f"{dup.name}.tmp{os.getpid()}")
-        events.repartition(2).write.mode("overwrite").parquet(str(tmp))
-        events.repartition(2).write.mode("append").parquet(str(tmp))
-        try:
-            os.rename(tmp, dup)
-        except OSError:  # another process won the rename; keep theirs
-            shutil.rmtree(tmp, ignore_errors=True)
+    landing = land_parquet(events, sf_dir, "events")
+    dup = _land_events_twice(events, landing)
 
     deduped = stream_dedup_within_watermark(
-        read_events_stream(spark, str(dup), max_files_per_trigger=1),
+        read_events_stream(spark, dup, max_files_per_trigger=1),
         watermark="3650 days",
     )
     name = f"stream_gate_dedup_wm_{landing.rsplit('_', 1)[-1]}"

@@ -12,8 +12,6 @@ schema mapping, or a quoting/escaping bug all surface as a hash mismatch.
 
 from __future__ import annotations
 
-import hashlib
-import tempfile
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
@@ -21,42 +19,22 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from map_reduce485_spark.queries import query
-from map_reduce485_spark.queries._util import T as tables, scratch_dir_scoped
+from map_reduce485_spark.queries._util import (
+    T as tables,
+    published_dir,
+    scratch_dir_scoped,
+    source_fingerprint,
+)
 from map_reduce485_spark.sources.io import read_csv, read_json
 
 
-def _scratch(kind: str, sf_dir: str) -> str:
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    return str(Path(tempfile.gettempdir()) / f"mr485_src_{kind}_{tag}")
-
-
 def _versions_base(spark: SparkSession, sf_dir: str) -> Path:
-    """Build (once) the immutable v1/v2 snapshot dirs used by
-    `versioned_snapshot_read` / `snapshot_diff`, with the same two
-    guarantees `_util.land_parquet` gives the streaming landing zones:
-
-    - the dir tag fingerprints the SOURCE supplier files (name, size,
-      mtime), not just the path — regenerated source data gets fresh
-      versions instead of replaying stale snapshots;
-    - v1, v2 and the `_latest` pointer are all written into a
-      process-unique tmp dir and published by ONE atomic rename(2), so two
-      concurrent first-run processes cannot interleave writes into the
-      same version dirs (the loser removes its own copy).
-    """
-    import os
-    import shutil
-
+    """The immutable v1/v2 snapshot dirs used by `versioned_snapshot_read` /
+    `snapshot_diff`, plus the `_latest` pointer, published once per source
+    fingerprint of supplier (`_util.published_dir`)."""
     (supplier,) = tables(spark, sf_dir, "supplier")
-    src = Path(sf_dir) / "supplier.parquet"
-    files = sorted(p for p in src.rglob("*") if p.is_file()) if src.is_dir() else [src]
-    h = hashlib.md5(f"{sf_dir}:versions".encode())
-    for f in files:
-        st = f.stat()
-        h.update(f"{f.name}:{st.st_size}:{st.st_mtime_ns}".encode())
-    base = Path(tempfile.gettempdir()) / f"mr485_src_versions_{h.hexdigest()[:12]}"
-    if not (base / "_latest").exists():
-        if base.exists():  # broken leftover: complete dirs always have _latest
-            shutil.rmtree(base, ignore_errors=True)
+
+    def build(tmp: str) -> None:
         v1 = supplier.filter(F.col("s_suppkey") % 2 == 0).select(
             "s_suppkey", "s_acctbal"
         )
@@ -66,17 +44,12 @@ def _versions_base(spark: SparkSession, sf_dir: str) -> Path:
             .otherwise(F.col("s_acctbal"))
             .alias("s_acctbal"),
         )
-        tmp = base.with_name(f"{base.name}.tmp{os.getpid()}")
-        v1.write.mode("overwrite").parquet(str(tmp / "v1"))
-        v2.write.mode("overwrite").parquet(str(tmp / "v2"))
-        (tmp / "_latest").write_text("v2")  # written last, inside tmp
-        try:
-            os.rename(tmp, base)
-        except OSError:  # another process won; keep theirs — but verify
-            shutil.rmtree(tmp, ignore_errors=True)
-            if not (base / "_latest").exists():
-                raise RuntimeError(f"versions dir {base} unusable after rename race")
-    return base
+        v1.write.parquet(f"{tmp}/v1")
+        v2.write.parquet(f"{tmp}/v2")
+        Path(tmp, "_latest").write_text("v2")
+
+    fp = source_fingerprint(sf_dir, "supplier")
+    return Path(published_dir(f"mr485_src_versions_{fp}", build))
 
 
 _NATION_SCHEMA = T.StructType(
@@ -111,7 +84,7 @@ def csv_source_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     read (`sources/io.read_csv`) → aggregate.  The oracle aggregates the
     original parquet, so the round-trip must be lossless."""
     (nation,) = tables(spark, sf_dir, "nation")
-    path = _scratch("csv", sf_dir)
+    path = scratch_dir_scoped("mr485_src_csv_")
     nation.write.mode("overwrite").option("header", True).csv(path)
     back = read_csv(spark, path, _NATION_SCHEMA, header=True)
     return back.groupBy("n_regionkey").agg(
@@ -136,7 +109,7 @@ def json_source_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     (Spark writes shortest-round-trip representations); the cents-sum makes
     the aggregate order-independent as everywhere else."""
     (supplier,) = tables(spark, sf_dir, "supplier")
-    path = _scratch("json", sf_dir)
+    path = scratch_dir_scoped("mr485_src_json_")
     supplier.select(
         "s_suppkey", "s_name", "s_nationkey", "s_acctbal"
     ).write.mode("overwrite").json(path)
@@ -171,14 +144,14 @@ def partition_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     from map_reduce485_spark.sources.io import write_partitioned_parquet
 
     (events,) = tables(spark, sf_dir, "events")
-    path = _scratch("events_by_date", sf_dir)
-    marker = Path(path) / "_SUCCESS"
-    if not marker.exists():  # layout build is one-time per sf_dir
-        write_partitioned_parquet(
+    path = published_dir(
+        f"mr485_src_events_by_date_{source_fingerprint(sf_dir, 'events')}",
+        lambda tmp: write_partitioned_parquet(
             events.withColumn("event_date", F.to_date("ts")),
-            path,
+            tmp,
             partition_by=["event_date"],
-        )
+        ),
+    )
     back = spark.read.parquet(path).filter(
         F.col("event_date").between("2024-01-08", "2024-01-14")
     )
@@ -212,9 +185,10 @@ def zorder_multidim_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     from map_reduce485_spark.operators.zorder import zorder_write
 
     (li,) = tables(spark, sf_dir, "lineitem")
-    path = _scratch("lineitem_zorder", sf_dir)
-    if not (Path(path) / "_SUCCESS").exists():  # layout build once per sf_dir
-        zorder_write(li, path, "l_orderkey", "l_partkey", n_files=8)
+    path = published_dir(
+        f"mr485_src_lineitem_zorder_{source_fingerprint(sf_dir, 'lineitem')}",
+        lambda tmp: zorder_write(li, tmp, "l_orderkey", "l_partkey", n_files=8),
+    )
     back = spark.read.parquet(path).filter(
         F.col("l_orderkey").between(1000, 3000)
         & F.col("l_partkey").between(500, 1500)
@@ -248,11 +222,14 @@ def compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     from map_reduce485_spark.operators.compact import compact
 
     (orders,) = tables(spark, sf_dir, "orders")
-    frag = _scratch("orders_fragmented", sf_dir)
-    comp = _scratch("orders_compacted", sf_dir)
-    if not (Path(comp) / "_SUCCESS").exists():  # build once per sf_dir
+
+    def build(tmp: str) -> None:
+        frag = scratch_dir_scoped("mr485_src_orders_fragmented_")
         orders.repartition(64).write.mode("overwrite").parquet(frag)
-        compact(spark, frag, comp, target_mb=128)
+        compact(spark, frag, tmp, target_mb=128)
+
+    fp = source_fingerprint(sf_dir, "orders")
+    comp = published_dir(f"mr485_src_orders_compacted_{fp}", build)
     return (
         spark.read.parquet(comp)
         .groupBy("o_orderpriority")
@@ -285,7 +262,7 @@ def orc_source_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from map_reduce485_spark.sources.io import read_orc
 
     (customer,) = tables(spark, sf_dir, "customer")
-    path = _scratch("orc", sf_dir)
+    path = scratch_dir_scoped("mr485_src_orc_")
     customer.select(
         "c_custkey", "c_mktsegment", "c_acctbal"
     ).write.mode("overwrite").orc(path)
@@ -329,7 +306,7 @@ def schema_evolution_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     `mergeSchema` costs a footer read per file, not a data pass — at scale
     pin the canonical schema in a catalog and read with it explicitly."""
     (supplier,) = tables(spark, sf_dir, "supplier")
-    path = _scratch("evolve", sf_dir)
+    path = scratch_dir_scoped("mr485_src_evolve_")
     old_gen = supplier.filter(F.col("s_suppkey") % 2 == 0).select(
         "s_suppkey", "s_nationkey", "s_acctbal"
     )
@@ -374,7 +351,7 @@ def csv_corrupt_records(spark: SparkSession, sf_dir: str) -> DataFrame:
     the gate checks that PERMISSIVE classified every row correctly and
     parsed the good rows' values."""
     (nation,) = tables(spark, sf_dir, "nation")
-    path = _scratch("corrupt", sf_dir)
+    path = scratch_dir_scoped("mr485_src_corrupt_")
     # hand-format lines; every 3rd key gets a non-numeric n_regionkey
     lines = nation.select(
         F.concat_ws(
@@ -447,7 +424,7 @@ def versioned_snapshot_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     (`_merge_swap_parquet` is the same idea for a single mutable table).
     The gate reads BOTH versions after both commits and checks each
     against its independently-derived oracle.  The version dirs are
-    source-fingerprinted and atomically published (`_versions_base`)."""
+    published once per source fingerprint (`_versions_base`)."""
     base = _versions_base(spark, sf_dir)
 
     def read_version(v: int):
@@ -892,7 +869,7 @@ def xml_source_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     inference at 100 TB would be a full extra pass, same discipline as
     the CSV/JSON readers."""
     (nation,) = tables(spark, sf_dir, "nation")
-    path = _scratch("xml", sf_dir)
+    path = scratch_dir_scoped("mr485_src_xml_")
     nation.write.mode("overwrite").format("xml").option("rootTag", "nations").option(
         "rowTag", "nation"
     ).save(path)

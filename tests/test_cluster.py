@@ -100,3 +100,44 @@ def test_submit_requires_input_mapper_reducer(main, argv, capsys):
     for flag in ("--input", "--mapper", "--reducer"):
         assert flag in err
     assert "--output" not in err.splitlines()[-1]
+
+
+def test_dispatch_answers_bad_requests():
+    """Bad input gets an error reply instead of a dropped connection."""
+    from map_reduce485_spark.mapreduce.job import JobQueue
+
+    queue = JobQueue(None)  # no submissions, so no Spark session is needed
+    try:
+        for line in [
+            b"not json",
+            b"[1, 2]",
+            b'{"message_type": "job_status", "job_id": 99}',
+            b'{"message_type": "job_status"}',
+            b'{"message_type": "new_manager_job", "input_directory": "in"}',
+            b'{"message_type": "no_such_verb"}',
+        ]:
+            reply = cluster.dispatch(queue, line)
+            assert list(reply) == ["error"], (line, reply)
+        assert queue.snapshot() == {}
+        assert cluster.dispatch(queue, b'{"message_type": "status"}') == {
+            "alive": True,
+            "jobs": {},
+        }
+    finally:
+        queue.shutdown()
+
+
+def test_wait_exits_on_error_reply(monkeypatch, capsys):
+    """`wait` reports a rejected request at once instead of polling until
+    --timeout."""
+    calls = []
+
+    def fake_send(port, msg, **kw):
+        calls.append(msg)
+        return {"error": "unknown job_id 99"}
+
+    monkeypatch.setattr(cluster, "send_message", fake_send)
+    assert cluster.main(["wait", "--job-id", "99", "--timeout", "2"]) == 1
+    assert len(calls) == 1
+    out = capsys.readouterr().out
+    assert "unknown job_id 99" in out and "timeout" not in out

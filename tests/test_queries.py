@@ -616,19 +616,35 @@ def test_released_checkpoint_frame_is_dead(spark):
     assert raises(derived)
 
 
-def test_scratch_dir_removed_on_release(spark):
+@pytest.mark.parametrize(
+    "name",
+    [
+        "mapreduce_wordcount_pipe",
+        "csv_source_roundtrip",
+        "json_source_roundtrip",
+        "orc_source_roundtrip",
+        "schema_evolution_scan",
+        "csv_corrupt_records",
+        "xml_source_roundtrip",
+    ],
+)
+def test_scratch_dir_removed_on_release(spark, name):
     """A builder's per-call work dir lives until the scope is released."""
+    import tempfile
     from pathlib import Path
     from urllib.parse import urlparse
 
     from map_reduce485_spark.queries._util import release_scoped_caches
 
     release_scoped_caches()
-    df = REGISTRY["mapreduce_wordcount_pipe"].fn(spark, SF_SMOKE)
+    df = REGISTRY[name].fn(spark, SF_SMOKE)
     assert df.collect()
-    # part files sit at <work>/out/part-*
-    work = Path(urlparse(df.inputFiles()[0]).path).parent.parent
-    assert work.name.startswith("mr485_wc_") and work.is_dir()
+    # the dir directly under the temp dir that holds every file df reads
+    tmp = Path(tempfile.gettempdir())
+    (work,) = {
+        tmp / Path(urlparse(f).path).relative_to(tmp).parts[0] for f in df.inputFiles()
+    }
+    assert work.name.startswith("mr485_") and work.is_dir()
     release_scoped_caches()
     assert not work.exists()
 

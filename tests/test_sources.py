@@ -2,6 +2,15 @@
 
 from __future__ import annotations
 
+import os
+import shutil
+import subprocess
+import sys
+import tempfile
+import time
+from pathlib import Path
+
+import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -173,50 +182,174 @@ def test_read_json_permissive_corrupt_records(spark, tmp_path):
     df.unpersist()
 
 
-def test_land_parquet_recovers_broken_leftover(spark):
-    """Regression (ADVICE r4): a landing dir that exists WITHOUT _SUCCESS
-    (crash leftover) used to make the rename fail ENOTEMPTY forever and
-    return the broken dir; now it is cleared and rebuilt."""
-    import shutil
-    from pathlib import Path
-
-    from map_reduce485_spark.catalog import load_table
+def _land_nation(spark, sf_dir):
     from map_reduce485_spark.queries._util import land_parquet
 
-    sf_dir = SF_SMOKE
-    nation = load_table(spark, sf_dir, "nation")
-    landing = Path(land_parquet(nation, sf_dir, "nation"))
-    assert (landing / "_SUCCESS").exists()
-    n = spark.read.parquet(str(landing)).count()
+    path = Path(land_parquet(load_table(spark, sf_dir, "nation"), sf_dir, "nation"))
+    return path, [spark.read.parquet(str(path)).count()]
 
-    # simulate the crash: same dir, no _SUCCESS, stale content present
-    (landing / "_SUCCESS").unlink()
-    landing2 = Path(land_parquet(nation, sf_dir, "nation"))
-    assert landing2 == landing
-    assert (landing2 / "_SUCCESS").exists()
-    assert spark.read.parquet(str(landing2)).count() == n
-    shutil.rmtree(landing, ignore_errors=True)  # leave no cross-test state
+
+def _versions(spark, sf_dir):
+    from map_reduce485_spark.queries.source_formats import _versions_base
+
+    base = _versions_base(spark, sf_dir)
+    rows = [spark.read.parquet(str(base / v)).count() for v in ("v1", "v2")]
+    return base, [*rows, (base / "_latest").read_text()]
+
+
+def _check_rebuilds_broken_leftover(spark, build):
+    """A published dir that exists WITHOUT _SUCCESS (a crash leftover) is
+    cleared and rebuilt at the same path, never returned as it is.  Returns
+    what `build` read from the dir."""
+    path, rows = build(spark, SF_SMOKE)
+    try:
+        assert (path / "_SUCCESS").exists()
+        assert build(spark, SF_SMOKE) == (path, rows)  # idempotent, same dir
+
+        (path / "_SUCCESS").unlink()  # the crash: same dir, content, no marker
+        assert build(spark, SF_SMOKE) == (path, rows)
+        assert (path / "_SUCCESS").exists()
+    finally:
+        shutil.rmtree(path, ignore_errors=True)  # leave no cross-test state
+    return rows
+
+
+def test_land_parquet_recovers_broken_leftover(spark):
+    _check_rebuilds_broken_leftover(spark, _land_nation)
 
 
 def test_versions_base_rebuilds_after_broken_leftover(spark):
-    """`_versions_base` shares land_parquet's contract: fingerprint-keyed,
-    atomically published, broken leftovers (no _latest) rebuilt."""
-    import shutil
-    from pathlib import Path
+    assert _check_rebuilds_broken_leftover(spark, _versions)[-1] == "v2"
 
-    from map_reduce485_spark.queries.source_formats import _versions_base
 
-    sf_dir = SF_SMOKE
-    base = Path(_versions_base(spark, sf_dir))
-    assert (base / "_latest").read_text() == "v2"
-    v1_rows = spark.read.parquet(str(base / "v1")).count()
-    assert _versions_base(spark, sf_dir) == base  # idempotent, same dir
+@pytest.fixture
+def tempdir(tmp_path, monkeypatch):
+    """Point the process temp dir, hence every published dir, at tmp_path."""
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    return tmp_path
 
-    (base / "_latest").unlink()  # crash leftover: dir without the pointer
-    base2 = Path(_versions_base(spark, sf_dir))
-    assert base2 == base and (base2 / "_latest").exists()
-    assert spark.read.parquet(str(base2 / "v1")).count() == v1_rows
-    shutil.rmtree(base, ignore_errors=True)
+
+def test_published_dir_builds_once(tempdir):
+    from map_reduce485_spark.queries._util import published_dir
+
+    calls = []
+
+    def build(tmp):
+        calls.append(tmp)
+        Path(tmp).mkdir()
+        Path(tmp, "data").write_text("x")
+
+    first = published_dir("pd_once", build)
+    assert published_dir("pd_once", build) == first == str(tempdir / "pd_once")
+    assert len(calls) == 1
+    assert [p.name for p in tempdir.iterdir()] == ["pd_once"]  # no tmp sibling left
+    assert sorted(p.name for p in Path(first).iterdir()) == ["_SUCCESS", "data"]
+
+
+def test_published_dir_failed_build_leaves_nothing(tempdir):
+    from map_reduce485_spark.queries._util import published_dir
+
+    def build(tmp):
+        Path(tmp).mkdir()
+        Path(tmp, "half").write_text("x")
+        raise RuntimeError("build failed")
+
+    with pytest.raises(RuntimeError, match="build failed"):
+        published_dir("pd_fail", build)
+    assert list(tempdir.iterdir()) == []
+
+
+_RACER = """
+import os, sys, time
+from pathlib import Path
+sys.path.insert(0, sys.argv[1])
+from map_reduce485_spark.queries._util import published_dir
+
+sync = Path(sys.argv[2])
+(sync / f"ready_{os.getpid()}").touch()
+while not (sync / "go").exists():
+    time.sleep(0.01)
+
+def build(tmp):
+    (sync / f"built_{os.getpid()}").touch()
+    Path(tmp).mkdir()
+    time.sleep(0.5)  # both racers are inside build at once
+    Path(tmp, "owner").write_text(str(os.getpid()))
+
+print(published_dir("pd_race", build))
+"""
+
+
+def test_published_dir_race_between_processes(tmp_path):
+    """Two processes building the same fresh name at once both return the
+    one complete dir: the rename loser keeps the winner's copy."""
+    sync, tmp = tmp_path / "sync", tmp_path / "tmp"
+    sync.mkdir()
+    tmp.mkdir()
+    repo = str(Path(__file__).resolve().parent.parent)
+    env = {**os.environ, "TMPDIR": str(tmp)}
+    procs = [
+        subprocess.Popen(
+            [sys.executable, "-c", _RACER, repo, str(sync)],
+            stdout=subprocess.PIPE, stderr=subprocess.PIPE, text=True, env=env,
+        )
+        for _ in range(2)
+    ]
+    try:
+        deadline = time.monotonic() + 60
+        while len(list(sync.glob("ready_*"))) < 2 and time.monotonic() < deadline:
+            time.sleep(0.05)
+        (sync / "go").touch()
+        outs = [p.communicate(timeout=60) for p in procs]
+    finally:
+        for p in procs:
+            p.kill()
+    for p, (out, err) in zip(procs, outs):
+        assert p.returncode == 0, err[-2000:]
+    final = tmp / "pd_race"
+    assert [out.strip() for out, _ in outs] == [str(final)] * 2
+    assert len(list(sync.glob("built_*"))) == 2  # a real race: both built
+    assert (final / "_SUCCESS").exists()
+    assert (final / "owner").read_text() in {str(p.pid) for p in procs}
+    assert [p.name for p in tmp.iterdir()] == ["pd_race"]
+
+
+def test_layout_dirs_follow_source_rewrite(spark, tempdir, monkeypatch):
+    """The layout dirs of zorder_multidim_filter, partition_pruned_scan and
+    compact_small_files are named after their source data: rewriting the
+    source table in place gives a fresh dir, never a replay of the old
+    rows.  Every dir lands under the test's own temp dir."""
+    import pyarrow.parquet as pq
+
+    from map_reduce485_spark.catalog import TABLES
+    from map_reduce485_spark.queries import REGISTRY, _load_all
+    from map_reduce485_spark.queries._util import release_scoped_caches
+    from tools.verify_local import check_query, open_oracle
+
+    monkeypatch.setenv("SPARK_GRAFT_CACHE_TABLES", "0")  # no cached old rows
+    _load_all()
+    sources = {
+        "zorder_multidim_filter": "lineitem",
+        "partition_pruned_scan": "events",
+        "compact_small_files": "orders",
+    }
+    sf = tempdir / "sf"
+    sf.mkdir()
+    for t in TABLES:
+        shutil.copyfile(f"{SF_SMOKE}/{t}.parquet", sf / f"{t}.parquet")
+
+    def check_all():
+        con = open_oracle(str(sf))
+        for name in sources:
+            status, detail = check_query(spark, con, REGISTRY[name], str(sf))
+            release_scoped_caches()
+            assert status == "PASS", f"{name}: {detail}"
+
+    check_all()
+    for table in sources.values():
+        t = pq.read_table(sf / f"{table}.parquet")
+        pq.write_table(t.take(list(range(0, t.num_rows, 2))), sf / f"{table}.parquet")
+    check_all()
 
 
 def test_python_datasource_partition_boundaries(spark):

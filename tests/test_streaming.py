@@ -392,3 +392,32 @@ def test_streaming_outer_join_emits_unmatched_views(spark):
         for r in interval_join_attribution(spark, SF_SMOKE).collect()
     }
     assert matched == inner
+
+
+def test_dedup_gate_rebuilds_broken_dup2_leftover(spark):
+    """A `<landing>.dup2` dir without _SUCCESS (a crash leftover holding one
+    part file) is rebuilt, not streamed: the dedup gate still matches its
+    oracle."""
+    import shutil
+    from pathlib import Path
+
+    from map_reduce485_spark.queries import REGISTRY, _load_all
+    from map_reduce485_spark.queries._util import land_parquet
+    from tools.verify_local import check_query, open_oracle
+
+    _load_all()
+    events = load_table(spark, SF_SMOKE, "events")
+    landing = Path(land_parquet(events, SF_SMOKE, "events"))
+    dup = landing.with_name(f"{landing.name}.dup2")
+    shutil.rmtree(dup, ignore_errors=True)
+    dup.mkdir()
+    part = next(landing.glob("part-*"))
+    shutil.copyfile(part, dup / part.name)
+    try:
+        status, detail = check_query(
+            spark, open_oracle(SF_SMOKE), REGISTRY["streaming_dedup_gate"], SF_SMOKE
+        )
+        assert status == "PASS", detail
+        assert (dup / "_SUCCESS").exists()
+    finally:
+        shutil.rmtree(dup, ignore_errors=True)
