@@ -7,13 +7,21 @@ push filters into and prune columns from.  At 100 TB the same code path works
 unchanged — `spark.read.parquet` over a partitioned table directory; partition
 pruning and predicate pushdown are what make scans scale, so all queries go
 through here rather than hand-rolled readers.
+
+A table opens without a Spark job once its schema is known: the first read
+of a source infers it (a footer-reading job) and stores it process-wide under
+the source's fingerprint, so later reads in any session pass it in.  A
+rewritten source gets a new fingerprint and is inferred again.
 """
 
 from __future__ import annotations
 
+import hashlib
 import os
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from map_reduce485_spark.session import tune_session
 
@@ -37,6 +45,40 @@ ALWAYS_BROADCAST = ("region", "nation")
 
 def table_path(sf_dir: str, name: str) -> str:
     return f"{sf_dir.rstrip('/')}/{name}.parquet"
+
+
+def source_fingerprint(sf_dir: str, table: str) -> str:
+    """12 hex digits of md5 over the source table's path and each of its
+    files' name, size and mtime: regenerated source data gets a new
+    fingerprint, so a dir named after it is never a stale replay."""
+    src = Path(sf_dir) / f"{table}.parquet"
+    files = sorted(p for p in src.rglob("*") if p.is_file()) if src.is_dir() else [src]
+    h = hashlib.md5(f"{sf_dir}:{table}".encode())
+    for f in files:
+        st = f.stat()
+        h.update(f"{f.name}:{st.st_size}:{st.st_mtime_ns}".encode())
+    return h.hexdigest()[:12]
+
+
+# (source fingerprint, *values of _SCHEMA_CONFS) → inferred StructType.  A
+# schema depends on the files and these reader confs, never on the session.
+_SCHEMAS: dict[tuple[str, ...], StructType] = {}
+_SCHEMA_CONFS = (
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+)
+
+
+def _read(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Scan one table, inferring its schema only on the first read."""
+    path = table_path(sf_dir, name)
+    key = (source_fingerprint(sf_dir, name), *(spark.conf.get(k) for k in _SCHEMA_CONFS))
+    if key in _SCHEMAS:
+        return spark.read.schema(_SCHEMAS[key]).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[key] = df.schema
+    return df
 
 
 # (session id, sf_dir, table) → (session, cached DataFrame).  The
@@ -67,7 +109,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name == "events":
         df = _load_events(spark, sf_dir)
     else:
-        df = spark.read.parquet(table_path(sf_dir, name))
+        df = _read(spark, sf_dir, name)
     if _cache_enabled():
         df = df.cache()
         _TABLE_CACHE[key] = (spark, df)
@@ -89,7 +131,7 @@ def _load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.types import LongType
 
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(table_path(sf_dir, "events"))
+    df = _read(spark, sf_dir, "events")
     ts_type = df.schema["ts"].dataType
     if isinstance(ts_type, LongType):  # nanos read as raw int64
         return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
@@ -100,9 +142,10 @@ def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {name: load_table(spark, sf_dir, name) for name in TABLES}
 
 
-def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Register every table as a temp view (for the SQL surface)."""
-    dfs = load_tables(spark, sf_dir)
+def register_views(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, DataFrame]:
+    """Register the named tables, default all, as temp views (for the SQL
+    surface)."""
+    dfs = {name: load_table(spark, sf_dir, name) for name in names or TABLES}
     for name, df in dfs.items():
         df.createOrReplaceTempView(name)
     return dfs

@@ -6,7 +6,6 @@ string-formatted timestamps, deterministic top-k tiebreaks.
 
 from __future__ import annotations
 
-import hashlib
 import os
 import shutil
 import tempfile
@@ -17,7 +16,7 @@ from typing import Callable
 from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from map_reduce485_spark.catalog import load_table
+from map_reduce485_spark.catalog import load_table, source_fingerprint
 
 
 def T(spark: SparkSession, sf_dir: str, *names: str) -> list[DataFrame]:
@@ -546,19 +545,6 @@ ORACLE_TS_FMT = "%Y-%m-%d %H:%M:%S"
 
 def oracle_fmt_ts(expr: str, alias: str) -> str:
     return f"strftime({expr}, '{ORACLE_TS_FMT}') AS {alias}"
-
-
-def source_fingerprint(sf_dir: str, table: str) -> str:
-    """12 hex digits of md5 over the source table's path and each of its
-    files' name, size and mtime: regenerated source data gets a new
-    fingerprint, so a dir named after it is never a stale replay."""
-    src = Path(sf_dir) / f"{table}.parquet"
-    files = sorted(p for p in src.rglob("*") if p.is_file()) if src.is_dir() else [src]
-    h = hashlib.md5(f"{sf_dir}:{table}".encode())
-    for f in files:
-        st = f.stat()
-        h.update(f"{f.name}:{st.st_size}:{st.st_mtime_ns}".encode())
-    return h.hexdigest()[:12]
 
 
 def published_dir(name: str, build: Callable[[str], None]) -> str:

@@ -190,10 +190,9 @@ WHERE l_quantity > (
 def scalar_and_in_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scalar subquery (exact-decimal global average) + IN subquery
     (Catalyst rewrites IN to a semi join).  SQL surface."""
-    from map_reduce485_spark.catalog import table_path
+    from map_reduce485_spark.catalog import register_views
 
-    spark.read.parquet(table_path(sf_dir, "lineitem")).createOrReplaceTempView("lineitem")
-    spark.read.parquet(table_path(sf_dir, "supplier")).createOrReplaceTempView("supplier")
+    register_views(spark, sf_dir, "lineitem", "supplier")
     return spark.sql(
         """
         SELECT l_orderkey, l_linenumber, CAST(l_quantity AS DOUBLE) AS quantity
@@ -699,10 +698,9 @@ def lateral_topn_per_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     the lateral into a join + per-key limit (the same physical shape the
     `window_topk_per_group` twin pins), so the surface differs but the
     scale story is identical: one shuffle on the correlation key."""
-    from map_reduce485_spark.catalog import table_path
+    from map_reduce485_spark.catalog import register_views
 
-    spark.read.parquet(table_path(sf_dir, "nation")).createOrReplaceTempView("nation")
-    spark.read.parquet(table_path(sf_dir, "supplier")).createOrReplaceTempView("supplier")
+    register_views(spark, sf_dir, "nation", "supplier")
     return spark.sql(_LATERAL_ORACLE)
 
 

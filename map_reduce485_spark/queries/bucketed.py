@@ -26,15 +26,10 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from map_reduce485_spark.catalog import source_fingerprint
 from map_reduce485_spark.operators.bucketing import bucketed_join, write_bucketed
 from map_reduce485_spark.queries import query
-from map_reduce485_spark.queries._util import (
-    T,
-    dsum,
-    oracle_dsum,
-    published_dir,
-    source_fingerprint,
-)
+from map_reduce485_spark.queries._util import T, dsum, oracle_dsum, published_dir
 
 _N_BUCKETS = 8
 

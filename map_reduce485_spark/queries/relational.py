@@ -514,10 +514,9 @@ def agg_stats_per_event_type(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def exists_subquery_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Correlated EXISTS via the SQL surface (Catalyst rewrites to semi join)."""
-    from map_reduce485_spark.catalog import table_path
+    from map_reduce485_spark.catalog import register_views
 
-    spark.read.parquet(table_path(sf_dir, "part")).createOrReplaceTempView("part")
-    spark.read.parquet(table_path(sf_dir, "lineitem")).createOrReplaceTempView("lineitem")
+    register_views(spark, sf_dir, "part", "lineitem")
     return spark.sql(
         """
         SELECT p_partkey, p_name FROM part

@@ -18,13 +18,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from map_reduce485_spark.catalog import source_fingerprint
 from map_reduce485_spark.queries import query
-from map_reduce485_spark.queries._util import (
-    T as tables,
-    published_dir,
-    scratch_dir_scoped,
-    source_fingerprint,
-)
+from map_reduce485_spark.queries._util import T as tables, published_dir, scratch_dir_scoped
 from map_reduce485_spark.sources.io import read_csv, read_json
 
 

@@ -177,9 +177,9 @@ def cube_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def grouping_sets_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GROUPING SETS via the SQL surface."""
-    from map_reduce485_spark.catalog import table_path
+    from map_reduce485_spark.catalog import register_views
 
-    spark.read.parquet(table_path(sf_dir, "lineitem")).createOrReplaceTempView("lineitem")
+    register_views(spark, sf_dir, "lineitem")
     return spark.sql(
         """
         SELECT CASE WHEN GROUPING(l_returnflag) = 1 THEN 'ALL' ELSE l_returnflag END AS returnflag,

@@ -514,3 +514,20 @@ def test_graph_shuffle_path_when_nodes_exceed_bound(spark, monkeypatch):
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
         release_scoped_caches()
+
+
+def test_source_tables_read_only_through_catalog():
+    """Only catalog.py scans a source table's parquet itself: a query that
+    read it directly would skip session tuning, the table cache and the
+    schema registry."""
+    from pathlib import Path
+
+    pkg = Path(__file__).resolve().parent.parent / "map_reduce485_spark"
+    hits = [
+        f"{path.relative_to(pkg)}:{i}"
+        for path in sorted(pkg.rglob("*.py"))
+        if path != pkg / "catalog.py"
+        for i, line in enumerate(path.read_text().splitlines(), 1)
+        if "read.parquet(table_path(" in line
+    ]
+    assert hits == []

@@ -27,6 +27,38 @@ def test_load_table_keeps_get_spark_partitions():
         "print('PLAIN', p.conf.get('spark.sql.shuffle.partitions'),"
         " p.conf.get('spark.sql.session.timeZone'))"
     )
+    lines = _run(code)
+    assert "BUILT 2" in lines
+    assert "PLAIN 8 UTC" in lines
+
+
+def test_sql_surface_queries_tune_plain_session():
+    """The SQL-surface queries register their views through the catalog, so
+    a session get_spark did not build comes out tuned."""
+    names = (
+        "grouping_sets_agg",
+        "exists_subquery_parts",
+        "scalar_and_in_subquery",
+        "lateral_topn_per_key",
+    )
+    code = (
+        "from map_reduce485_spark import get_spark;"
+        "from map_reduce485_spark.queries import all_queries;"
+        "qs = all_queries();"
+        "s = get_spark('conf_proc', cpus=2, shuffle_partitions=2);"
+        f"\nfor name in {names!r}:\n"
+        "    p = s.newSession(); p.conf.set('spark.sql.session.timeZone', 'America/Chicago')\n"
+        f"    assert qs[name](p, {SF_SMOKE!r}).count() > 0\n"
+        "    print(name, p.conf.get('spark.sql.shuffle.partitions'),"
+        " p.conf.get('spark.sql.session.timeZone'))"
+    )
+    lines = _run(code)
+    for name in names:
+        assert f"{name} 8 UTC" in lines
+
+
+def _run(code: str) -> list[str]:
+    """stdout lines of ``python -c code`` with a 4-cpu engine config."""
     env = dict(
         os.environ,
         SPARK_GRAFT_CPUS="4",
@@ -42,6 +74,4 @@ def test_load_table_keeps_get_spark_partitions():
         timeout=300,
     )
     assert out.returncode == 0, out.stderr[-2000:]
-    lines = out.stdout.splitlines()
-    assert "BUILT 2" in lines
-    assert "PLAIN 8 UTC" in lines
+    return out.stdout.splitlines()
