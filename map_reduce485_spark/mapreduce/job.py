@@ -1,17 +1,17 @@
 """MapReduce-compatible job execution on Spark RDDs (Layer A).
 
 Reproduces the reference framework's user-facing semantic contract
-(sohammehehale/map_reduce485; citations are file:line into /root/reference/
-map_reduce/mapreduce/):
+(sohammehendale/map_reduce485; citations are file:line into the reference's
+map_reduce/mapreduce/ package):
 
 - Data model: line-oriented UTF-8 text; a record's key is the text before the
   first tab, the rest is the value (``worker/__main__.py:115``).
 - Map: an arbitrary executable gets input lines on stdin and emits zero or
   more ``key\\tvalue`` lines on stdout (``worker/__main__.py:104-114``).
-- Shuffle: records hash-partitioned by ``md5(key) % num_reducers``
-  (``worker/__main__.py:117-121``); within each reduce partition all lines
-  are sorted by Unicode codepoint over the whole ``key\\tvalue`` line
-  (``worker/__main__.py:161`` + k-way merge at ``:201``), so equal keys are
+- Shuffle: map tasks bucket lines per reducer by ``md5(key) % num_reducers``
+  (``worker/__main__.py:117-121``); each reduce partition sorts its lines by
+  Unicode codepoint over the whole ``key\\tvalue`` line and merges the sorted
+  runs (``:157-163`` + k-way merge at ``:201``), so equal keys are
   contiguous and values are secondarily sorted.
 - Reduce: the reducer executable is spawned once per reduce partition and
   receives the partition's fully merged, sorted stream on stdin
@@ -29,19 +29,26 @@ reference's no-map-side-aggregation behavior.
 
 Scale note: at 100 TB the executable path is still fully distributed —
 ``RDD.pipe`` spawns the executable once per partition on the executor, data
-streams through the process without driver involvement, and
-``repartitionAndSortWithinPartitions`` is Spark's external (spilling) sort,
-unlike the reference's in-memory ``list.sort()`` (``worker/__main__.py:158``).
+streams through the process without driver involvement, map tasks buffer at
+most ``BATCH_LINES`` lines, and the reduce-side ``ExternalSorter`` spills
+sorted runs past ``spark.python.worker.memory``, unlike the reference's
+in-memory ``list.sort()`` (``worker/__main__.py:158``).
 """
 
 from __future__ import annotations
 
 import hashlib
+from collections import defaultdict
 from collections.abc import Callable, Iterable, Iterator
 from dataclasses import dataclass
-from itertools import groupby
+from itertools import chain, groupby, islice
+from operator import itemgetter, methodcaller
 
+from pyspark.shuffle import ExternalSorter
 from pyspark.sql import SparkSession
+
+BATCH_LINES = 4096  # map-output lines one task buffers across all buckets
+MEMO_KEYS = 65536  # distinct keys whose placement one map task remembers
 
 
 def delete_output_dir(spark: SparkSession, path: str) -> bool:
@@ -74,13 +81,37 @@ def md5_partition(key: str, num_partitions: int) -> int:
     in is byte-identical to the reference (Spark's own Murmur3 default would
     preserve semantics but not placement).
     """
-    return int(hashlib.md5(key.encode("utf-8")).hexdigest(), 16) % num_partitions
+    return int.from_bytes(hashlib.md5(key.encode("utf-8")).digest(), "big") % num_partitions
 
 
 def extract_key(line: str) -> str:
     """Key = text before the first tab; a tab-less line is all key
     (``worker/__main__.py:115``)."""
     return line.split("\t", 1)[0]
+
+
+def place_lines(lines: Iterable[str], num_r: int) -> Iterator[tuple[int, list[str]]]:
+    """Map-side shuffle write (``worker/__main__.py:117-121``): one
+    ``(reducer_id, [lines])`` batch per bucket every ``BATCH_LINES`` lines; a
+    key is hashed once per task while the ``MEMO_KEYS``-capped memo holds it."""
+    memo: dict[str, int] = {}
+    it = iter(lines)
+    while chunk := list(islice(it, BATCH_LINES)):
+        buckets: defaultdict[int, list[str]] = defaultdict(list)
+        for line in chunk:
+            key = line.partition("\t")[0]
+            part = memo.get(key)
+            if part is None:
+                if len(memo) == MEMO_KEYS:
+                    memo.clear()
+                part = memo[key] = md5_partition(key, num_r)
+            buckets[part].append(line)
+        yield from buckets.items()
+
+
+def sort_lines(batches: Iterable[list[str]], memory_mb: float) -> Iterable[str]:
+    """Reduce-side sort: the batches' lines in codepoint order, spilling past ``memory_mb``."""
+    return ExternalSorter(memory_mb).sorted(chain.from_iterable(batches))
 
 
 @dataclass
@@ -129,17 +160,17 @@ class MapReduceJob:
         mapped = self._apply_mapper(lines)
 
         num_r = req.num_reducers
-        # Fuse shuffle-partition + whole-line sort + k-way merge (reference
-        # ops: worker/__main__.py:115-125, :157-163, :201) into Spark's single
-        # repartitionAndSortWithinPartitions.  Keying by the whole line gives
-        # codepoint order over `key\tvalue`, i.e. (key, value) secondary sort.
+        # Shuffle in batches (reference :117-121, :157-163, merge at :201):
+        # map tasks ship R line batches per flush, not one pickled pair per
+        # line; reduce tasks sort plain strings, whose codepoint order over
+        # `key\tvalue` is the (key, value) secondary sort, and spill past 90%
+        # of spark.python.worker.memory, as PySpark's own sorted shuffle does.
+        memory_mb = mapped._memory_limit() * 0.9
         shuffled = (
-            mapped.map(lambda line: (line, None))
-            .repartitionAndSortWithinPartitions(
-                numPartitions=num_r,
-                partitionFunc=lambda line: md5_partition(extract_key(line), num_r),
-            )
-            .map(lambda kv: kv[0])
+            mapped.mapPartitions(lambda it: place_lines(it, num_r))
+            .partitionBy(num_r, lambda part: part)
+            .values()
+            .mapPartitions(lambda batches: sort_lines(batches, memory_mb))
         )
 
         reduced = self._apply_reducer(shuffled)
@@ -151,6 +182,7 @@ class MapReduceJob:
     def _apply_mapper(self, lines):
         mapper = self.request.mapper_executable
         if callable(mapper):
+            # flatMap fails the task on a mapper StopIteration, not truncating it
             return lines.flatMap(mapper)
         # Executable contract: spawned once per partition vs once per input
         # file in the reference (worker/__main__.py:104-110) — equivalent for
@@ -165,11 +197,9 @@ class MapReduceJob:
             return sorted_lines.pipe(reducer)
 
         def reduce_partition(it: Iterator[str]) -> Iterator[str]:
-            for key, group in groupby(it, key=extract_key):
-                values = (
-                    line.split("\t", 1)[1] if "\t" in line else "" for line in group
-                )
-                yield from reducer(key, values)
+            # one split per line; a tab-less line is all key, value ""
+            for key, group in groupby(map(methodcaller("partition", "\t"), it), itemgetter(0)):
+                yield from reducer(key, map(itemgetter(2), group))
 
         return sorted_lines.mapPartitions(reduce_partition, preservesPartitioning=True)
 

@@ -1,16 +1,40 @@
 from __future__ import annotations
 
+import os
+import subprocess
 import sys
 from pathlib import Path
 
 import pytest
 
-sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
+ROOT = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(ROOT))
 
 from map_reduce485_spark import get_spark
 
 SF_SMOKE = "/root/testdata/sf0.001"
 SF_CORRECT = "/root/testdata/sf0.01"
+
+
+def run_python(code: str) -> list[str]:
+    """stdout lines of ``python -c code`` with a 4-cpu engine config, for
+    tests that need a Spark session of their own."""
+    env = dict(
+        os.environ,
+        SPARK_GRAFT_CPUS="4",
+        SPARK_GRAFT_DRIVER_MEM="1g",
+        PYTHONPATH=os.pathsep.join(p for p in (str(ROOT), os.environ.get("PYTHONPATH")) if p),
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", code],
+        capture_output=True,
+        text=True,
+        env=env,
+        cwd=ROOT,
+        timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    return out.stdout.splitlines()
 
 
 @pytest.fixture(scope="session")
@@ -74,6 +98,7 @@ _SLOW_NODEIDS = {
     "test_compact.py::test_compact_small_files",
     "test_queries.py::test_stratified_sample_nesting_and_uniformity",
     "test_streaming.py::test_stream_session_ttl_equals_sessionize",
+    "test_mapreduce.py::test_reduce_side_sort_spills_with_same_output",
 }
 
 

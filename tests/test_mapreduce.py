@@ -1,16 +1,21 @@
 """Layer A golden tests: the reference's canonical jobs (SURVEY.md §5)
 run through MapReduceJob — word count, grep, distinct, inverted index,
-identity-sort, reduce-side join."""
+identity-sort, reduce-side join — and the batched shuffle's map-side
+placement, reduce-side spilling sort and job shape."""
 
 from __future__ import annotations
 
 import hashlib
+import itertools
+import uuid
+from collections import Counter
 from pathlib import Path
 
 import pytest
 
 from map_reduce485_spark.mapreduce import JobRequest, MapReduceJob, md5_partition
 from map_reduce485_spark.mapreduce.job import extract_key
+from tests.conftest import run_python
 
 
 @pytest.fixture()
@@ -337,3 +342,167 @@ def test_stateful_mapper_runs_per_partition_not_per_file(spark, tmp_path):
     assert int(total) == n_lines  # aggregate invariant under granularity
     # per-partition, not per-file: 2 files but `expected_partitions` spawns
     assert int(n_invocations) == expected_partitions
+
+
+# -- batched shuffle -----------------------------------------------------------
+
+_PLACE_LINES = [
+    "über\t1",
+    "über\t2",
+    "中文\tx",
+    "🎉",  # tab-less: all key
+    "",  # empty: key ""
+    "\tvalue only",  # key ""
+    "fox\t1\textra tab",
+    "a b\t1",
+] * 9 + [f"k{i}\t{i}" for i in range(40)]
+
+
+@pytest.mark.parametrize("num_r", [1, 3, 1000])
+def test_place_lines_buckets_by_md5_within_caps(monkeypatch, num_r):
+    """The map-side generator, without Spark: every batch for reducer p
+    holds only lines whose key md5-places in p, no line is lost or added,
+    a flush never buffers more than BATCH_LINES lines, and the memo never
+    holds more than MEMO_KEYS keys."""
+    from map_reduce485_spark.mapreduce import job
+
+    monkeypatch.setattr(job, "BATCH_LINES", 7)
+    monkeypatch.setattr(job, "MEMO_KEYS", 5)
+    gen = job.place_lines(iter(_PLACE_LINES), num_r)
+    got: Counter = Counter()
+    for part, batch in gen:
+        local = gen.gi_frame.f_locals
+        assert sum(map(len, local["buckets"].values())) <= 7
+        assert len(local["memo"]) <= 5
+        assert 0 <= part < num_r and batch
+        assert all(md5_partition(extract_key(line), num_r) == part for line in batch)
+        got.update(batch)
+    assert got == Counter(_PLACE_LINES)
+
+
+def test_place_lines_hashes_each_key_once(monkeypatch):
+    """Under the memo cap, a task hashes each distinct key exactly once."""
+    from map_reduce485_spark.mapreduce import job
+
+    calls: list[str] = []
+
+    def counted(key, n):
+        calls.append(key)
+        return md5_partition(key, n)
+
+    monkeypatch.setattr(job, "md5_partition", counted)
+    batches = list(job.place_lines(_PLACE_LINES, 3))
+    assert sorted(calls) == sorted({extract_key(line) for line in _PLACE_LINES})
+    assert sum(len(b) for _, b in batches) == len(_PLACE_LINES)
+
+
+def test_sort_lines_spills_and_merges_in_order(monkeypatch, tmp_path):
+    """The reduce-side sort, without Spark: once the worker's memory passes
+    the budget, sorted runs go to disk and the merge still yields every
+    line in codepoint order."""
+    from pyspark import shuffle
+
+    from map_reduce485_spark.mapreduce.job import sort_lines
+
+    monkeypatch.setenv("SPARK_LOCAL_DIRS", str(tmp_path))
+    rss = itertools.count(100, 10)  # MiB, growing on every poll
+    monkeypatch.setattr(shuffle, "get_used_memory", lambda: next(rss))
+    monkeypatch.setattr(shuffle, "DiskBytesSpilled", 0)
+    lines = [line for i in range(3000) for line in (f"w{(i * 7919) % 211}\t{i % 7}", "über", "")]
+    batches = [lines[i : i + 500] for i in range(0, len(lines), 500)]
+    assert list(sort_lines(batches, 1)) == sorted(lines)
+    assert shuffle.DiskBytesSpilled > 0
+
+
+def _stop_on(word: str):
+    """A word-count mapper and reducer that raise StopIteration from plain
+    (non-generator) functions when they meet ``word``."""
+
+    def stop_map(line):
+        if word in line.split():
+            raise StopIteration
+        return [f"{w}\t1" for w in line.split()]
+
+    def stop_reduce(key, values):
+        if key == word:
+            raise StopIteration
+        return [f"{key}\t{sum(int(v) for v in values)}"]
+
+    return stop_map, stop_reduce
+
+
+@pytest.mark.parametrize("side", ["mapper", "reducer"])
+def test_stop_iteration_fails_job(spark, text_input, tmp_path, side):
+    """A StopIteration escaping the user's mapper or reducer fails the job
+    rather than silently truncating the rest of the partition."""
+    stop_map, stop_reduce = _stop_on("lazy")
+    wc_map, wc_reduce = make_wc()
+    mapper, reducer = (stop_map, wc_reduce) if side == "mapper" else (wc_map, stop_reduce)
+    out = tmp_path / "out"
+    with pytest.raises(Exception, match="StopIteration"):
+        MapReduceJob(spark, JobRequest(str(text_input), str(out), mapper, reducer, 2, 1)).run()
+    assert not (out / "_SUCCESS").exists()
+
+
+def test_wordcount_is_one_job_of_two_stages(spark, text_input, tmp_path):
+    """Layer A runs one map stage and one reduce stage: no extra shuffle
+    and no eager job."""
+    sc = spark.sparkContext
+    group = f"mr-shape-{uuid.uuid4().hex}"
+    wc_map, wc_reduce = make_wc()
+    sc.setJobGroup(group, group)
+    try:
+        MapReduceJob(spark, JobRequest(str(text_input), str(tmp_path / "out"), wc_map, wc_reduce, 2, 3)).run()
+    finally:
+        sc._jsc.clearJobGroup()
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(jobs) == 1
+    assert len(sc.statusTracker().getJobInfo(jobs[0]).stageIds) == 2
+
+
+def test_reduce_side_sort_spills_with_same_output(spark, tmp_path):
+    """With ``spark.python.worker.memory`` far below a reduce partition's
+    lines, the reduce-side sort spills sorted runs to disk and merges them;
+    the part files are byte-identical to an in-memory run."""
+    ind = tmp_path / "input"
+    ind.mkdir()
+    words = [f"w{(i * 7919) % 6007}" if i % 11 else f"ü{i % 97}" for i in range(150_000)]
+    for f in range(2):
+        half = words[f::2]
+        (ind / f"{f}.txt").write_text("\n".join(" ".join(half[i : i + 10]) for i in range(0, len(half), 10)) + "\n")
+    wc_map, wc_reduce = make_wc()
+    normal = tmp_path / "normal"
+    MapReduceJob(spark, JobRequest(str(ind), str(normal), wc_map, wc_reduce, 2, 2)).run()
+
+    spilled = tmp_path / "spilled"
+    code = f"""
+from pyspark.sql import SparkSession
+from map_reduce485_spark.mapreduce import JobRequest, MapReduceJob
+
+def wc_map(line):
+    return [w + "\\t1" for w in line.split()]
+
+def wc_reduce(key, values):
+    yield f"{{key}}\\t{{sum(int(v) for v in values)}}"
+
+# a fresh worker per task: a reused one's RSS already holds the memory
+# freed by its earlier tasks, which the sort would fill without growing
+spark = (SparkSession.builder.master("local[2]")
+         .config("spark.python.worker.memory", "1m")
+         .config("spark.python.worker.reuse", "false")
+         .config("spark.ui.enabled", "false").getOrCreate())
+sc = spark.sparkContext
+sc.setJobGroup("spill", "spill")
+MapReduceJob(spark, JobRequest({str(ind)!r}, {str(spilled)!r}, wc_map, wc_reduce, 2, 2)).run()
+sc._jsc.sc().listenerBus().waitUntilEmpty()
+[job] = sc.statusTracker().getJobIdsForGroup("spill")
+reduce_stage = max(sc.statusTracker().getJobInfo(job).stageIds)
+print("SPILL", sc._jsc.sc().statusStore().lastStageAttempt(reduce_stage).diskBytesSpilled())
+"""
+    [spill] = [line for line in run_python(code) if line.startswith("SPILL ")]
+    assert int(spill.split()[1]) > 0
+    names = sorted(p.name for p in normal.iterdir() if p.name.startswith("part-"))
+    assert names == ["part-00000", "part-00001"]
+    assert sorted(p.name for p in spilled.iterdir() if p.name.startswith("part-")) == names
+    for name in names:
+        assert (spilled / name).read_bytes() == (normal / name).read_bytes()

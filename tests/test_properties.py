@@ -10,6 +10,7 @@ sorts whole ``key\\tvalue`` lines by Unicode codepoint
 
 from __future__ import annotations
 
+import hashlib
 from collections import Counter
 from pathlib import Path
 
@@ -97,6 +98,15 @@ def test_sort_and_placement_fidelity(spark, tmp_path_factory, lines):
             assert md5_partition(extract_key(line), 3) == part_idx, (
                 f"line {line!r} misplaced"
             )
+
+
+@given(key=st.text(), num_r=st.integers(1, 64))
+@settings(max_examples=300, deadline=None)
+def test_md5_partition_matches_hexdigest_form(key, num_r):
+    """The digest-bytes placement is the reference's hexdigest formula
+    (``worker/__main__.py:117-121``) for any Unicode key and R."""
+    want = int(hashlib.md5(key.encode("utf-8")).hexdigest(), 16) % num_r
+    assert md5_partition(key, num_r) == want
 
 
 def test_pack_sequences_offsets_contiguous_and_bounded(spark):

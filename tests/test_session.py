@@ -4,14 +4,7 @@ Runs in a subprocess so the shared test session's confs are not touched."""
 
 from __future__ import annotations
 
-import os
-import subprocess
-import sys
-from pathlib import Path
-
-from tests.conftest import SF_SMOKE
-
-ROOT = Path(__file__).resolve().parent.parent
+from tests.conftest import SF_SMOKE, run_python
 
 
 def test_load_table_keeps_get_spark_partitions():
@@ -27,7 +20,7 @@ def test_load_table_keeps_get_spark_partitions():
         "print('PLAIN', p.conf.get('spark.sql.shuffle.partitions'),"
         " p.conf.get('spark.sql.session.timeZone'))"
     )
-    lines = _run(code)
+    lines = run_python(code)
     assert "BUILT 2" in lines
     assert "PLAIN 8 UTC" in lines
 
@@ -52,26 +45,6 @@ def test_sql_surface_queries_tune_plain_session():
         "    print(name, p.conf.get('spark.sql.shuffle.partitions'),"
         " p.conf.get('spark.sql.session.timeZone'))"
     )
-    lines = _run(code)
+    lines = run_python(code)
     for name in names:
         assert f"{name} 8 UTC" in lines
-
-
-def _run(code: str) -> list[str]:
-    """stdout lines of ``python -c code`` with a 4-cpu engine config."""
-    env = dict(
-        os.environ,
-        SPARK_GRAFT_CPUS="4",
-        SPARK_GRAFT_DRIVER_MEM="1g",
-        PYTHONPATH=os.pathsep.join(p for p in (str(ROOT), os.environ.get("PYTHONPATH")) if p),
-    )
-    out = subprocess.run(
-        [sys.executable, "-c", code],
-        capture_output=True,
-        text=True,
-        env=env,
-        cwd=ROOT,
-        timeout=300,
-    )
-    assert out.returncode == 0, out.stderr[-2000:]
-    return out.stdout.splitlines()
