@@ -14,6 +14,10 @@ never a per-band ``unionAll``: a union re-runs the signature aggregate once
 per branch per join side, while ``inline`` derives it once (round-14 A/B on
 ``dedup_minhash_lsh``: JVM CPU 0.69x, OPTIMIZATION_r14.md).  Candidates
 are the band self-join of those rows (:func:`candidate_pairs`).
+
+SimHash bands through :func:`band_rows` too: ``queries/dedup.py``'s
+``_simhash_banded_pairs`` puts each fingerprint chunk in a ``d{c}`` column
+and self-joins the band rows with its own first-matching-band verify.
 """
 
 from __future__ import annotations

@@ -548,40 +548,36 @@ def _simhash_banded_pairs(
     qualifying pair shares at least one identical chunk.  Shared by the
     16-bit oracle twin (4x4-bit nibbles, 16 buckets/band — fine at test SF)
     and the 64-bit production shape (4x16-bit chunks, 65,536 buckets/band —
-    the geometry whose bucket sizes stay bounded at corpus scale)."""
+    the geometry whose bucket sizes stay bounded at corpus scale).  Chunk
+    ``c`` is digest ``d{c}`` of MinHash's one banding shape,
+    :func:`~map_reduce485_spark.operators.minhash.band_rows`."""
     assert max_hamming < n_chunks, "pigeonhole needs more chunks than flips"
     mask = (1 << chunk_bits) - 1
-    chunks = None
-    for c in range(n_chunks):
-        ch = fp.select(
-            "doc_id",
-            "simhash",
-            F.lit(c).alias("chunk_id"),
-            F.shiftright("simhash", chunk_bits * c)
-            .bitwiseAND(F.lit(mask))
-            .alias("chunk"),
-        )
-        chunks = ch if chunks is None else chunks.unionAll(ch)
-    a = chunks.alias("a")
-    b = chunks.alias("b")
+    chunk_cols = [
+        F.shiftright("simhash", chunk_bits * c).bitwiseAND(F.lit(mask)).alias(f"d{c}")
+        for c in range(n_chunks)
+    ]
+    chunks = band_rows(
+        fp.select("doc_id", "simhash", *chunk_cols), "doc_id", "simhash", n_bands=n_chunks
+    )
+    a, b = chunks.alias("a"), chunks.alias("b")
     x = F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))
-    # first-match-band dedup: all chunks below chunk_id differ, i.e. the
-    # low chunk_bits*chunk_id bits of a⊕b have no zero chunk.  Build the
-    # check as "every earlier chunk is nonzero" with a bounded AND chain
-    # (chunk_id is one literal per union branch, so this folds per branch).
+    # first-match-band dedup: all chunks below band_id differ, i.e. the
+    # low chunk_bits*band_id bits of a⊕b have no zero chunk.  Build the
+    # check as "every earlier chunk is nonzero" with a bounded AND chain.
     # Arithmetic-vs-logical shift is irrelevant: the mask keeps only the
     # true low bits, so the sign bit of a 64-bit fingerprint never leaks.
     earlier_nonzero = F.lit(True)
     for c in range(1, n_chunks):
         earlier_nonzero = earlier_nonzero & (
-            (F.col("a.chunk_id") < c)
+            (F.col("a.band_id") < c)
             | (F.shiftright(x, chunk_bits * (c - 1)).bitwiseAND(F.lit(mask)) != 0)
         )
     return (
         a.join(
             b,
-            (F.col("a.chunk_id") == F.col("b.chunk_id"))
-            & (F.col("a.chunk") == F.col("b.chunk"))
+            (F.col("a.band_id") == F.col("b.band_id"))
+            & (F.col("a.band") == F.col("b.band"))
             & (F.col("a.doc_id") < F.col("b.doc_id")),
         )
         .filter(earlier_nonzero)

@@ -400,14 +400,18 @@ def _logical_nodes(jnode):
         "dedup_lsh_band_sweep",
         "minhash_jaccard_calibration",
         "decontaminate_minhash_lsh",
+        "dedup_simhash_banded",
+        "dedup_simhash_summary_wide",
     ],
 )
 def test_minhash_band_rows_not_unioned(spark, name):
-    """Every banding MinHash consumer derives its band rows from one
-    `inline` over the signature (operators/minhash.py): no Union may feed
-    a band join, since a per-band union re-runs the signature aggregate
-    once per branch per join side.  (minhash_calibration_random_pairs
-    scores a random matching and never bands.)"""
+    """Every banding consumer, MinHash and SimHash alike, derives its band
+    rows from one `inline` over the digest columns
+    (operators/minhash.band_rows): no Union may feed a band join, since a
+    per-band union re-runs the rows' source (the signature aggregate, the
+    fingerprint scan) once per branch per join side.
+    (minhash_calibration_random_pairs scores a random matching and never
+    bands.)"""
     from map_reduce485_spark.queries._util import release_scoped_caches
 
     plan = _q(spark, name)._jdf.queryExecution().optimizedPlan()

@@ -1,37 +1,51 @@
-"""Whole-registry physical-plan audit: flags CartesianProduct (always a
-bug) and BroadcastNestedLoopJoin (legitimate only for documented broadcast
-patterns) across every query's plan — and, for every whitelisted BNLJ with
-a documented row bound, EXECUTES the query at sf0.001 and checks the BNLJ
-build side's actual `numOutputRows` against that bound (round-6 verdict
-item: the whitelist must not rot — a "1-row scalar probe" that silently
-grows into a corpus-sized broadcast now fails the audit).
+"""The physical-plan tool, one CLI with four modes.
 
-    python tools/plan_audit.py
+    python tools/plan_audit.py [audit|dump|stats|stream] [--names a,b] [--sf-dir DIR]
 
-Whitelist semantics (``KNOWN_BNLJ``: name → bound):
+- ``audit`` (default, sf0.001): flags CartesianProduct (always a bug),
+  BNLJ outside the whitelist below and global windows over data-scale
+  input, and EXECUTES each whitelisted BNLJ query to check its build
+  side's ``numOutputRows`` against the bound.  Exits non-zero on failure.
+- ``dump`` (bench set, sf0.1, uncached tables): ``explain("formatted")``
+  to ``plans/<tag>/<query>_<suffix>.txt``, one Exchange/join/Python line
+  per query.
+- ``stats`` (registry, sf0.001, cached tables): per query, Exchange count,
+  joins, Python nodes, SinglePartition and global-sort flags.
+- ``stream`` (sf0.01): each streaming job's extended logical plan under a
+  watermark / stateful-operator / schema header, to
+  ``plans/<tag>/streaming_<job>.txt``.
 
-- an int bound: the BNLJ build side is a constant-size probe (scalar
-  aggregate, literal range, k query rows) documented per name below; the
-  audit measures the executed build side and fails if it exceeds the bound
-  or cannot be measured at all.
-- ``None``: a documented all-pairs test-SF baseline whose banded/bucketed
-  scale twin is the production path — its build side GROWS with the corpus
-  by design, so no constant bound exists (exactly two of these plus the
-  LSH variant whose BNLJ only appears at larger SFs).
+``audit``, ``dump`` and ``stats`` share one registry loop (:func:`_sweep`)
+that releases each query's scoped storage before the next.  ``dump`` and
+``stream`` take ``--sf-dir`` from ``$SPARK_GRAFT_SF_DIR`` when it is set.
 
-Exits non-zero on any CartesianProduct, any NEW BNLJ, or any bound breach.
+Whitelist semantics (``KNOWN_BNLJ``: name → bound): an int bound means the
+BNLJ build side is a constant-size probe (scalar aggregate, literal range,
+k query rows) documented per name below, measured and failed when over the
+bound or unmeasurable; ``None`` marks a documented all-pairs test-SF
+baseline whose banded/bucketed twin is the production path — its build
+side grows with the corpus by design (two of these plus the LSH variant
+whose BNLJ only appears at larger SFs).
 """
 
 from __future__ import annotations
 
+import argparse
+import os
+import re
 import sys
+from functools import partial
 from pathlib import Path
 
-sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
+_ROOT = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(_ROOT))
 
 from map_reduce485_spark import get_spark
-from map_reduce485_spark.plans import explain_str
-from map_reduce485_spark.queries import REGISTRY, _load_all
+from map_reduce485_spark.plans import explain_str, plan_shape
+from map_reduce485_spark.queries import REGISTRY, _load_all, bench_queries
+from map_reduce485_spark.queries._util import T, land_parquet, release_scoped_caches
+
+_DATA = "/root/testdata"  # the generated sf0.001 / sf0.01 / sf0.1 table dirs
 
 # name → max allowed build-side rows (None = all-pairs sf-baseline, no
 # constant bound by design).  Bounds are the documented probe size with a
@@ -178,9 +192,7 @@ KNOWN_GLOBAL_WINDOW: dict[str, str] = {
 # (doc_id, user_id, session_id, order/part/supp keys, …) yields data-scale
 # rows — round-9 verdict item 1: such an aggregate must NOT count as
 # bounding the window above it.
-import re as _re
-
-_BOUNDED_KEY_RE = _re.compile(
+_BOUNDED_KEY_RE = re.compile(
     r"""^(
       _dr_pid | _dp_pid | _ps_pid | _pid.*          # spark_partition_id tags
     | event_type | lang | language | source | split | label | level
@@ -201,13 +213,13 @@ _BOUNDED_KEY_RE = _re.compile(
     | token_len | len_bucket | n_gram | peak | sign | lag
     | t_hours            # duration-in-hours keys: bounded by the calendar
     )$""",               # span of the corpus, not its row count
-    _re.VERBOSE,
+    re.VERBOSE,
 )
 
 # grouping EXPRESSIONS (surfaced as `_groupingexpression` attributes) whose
 # value domain is calendar-bounded: any truncation of a timestamp to a
 # calendar grain yields at most span/grain distinct values
-_CALENDAR_EXPR_RE = _re.compile(
+_CALENDAR_EXPR_RE = re.compile(
     r"date_trunc|to_date|\byear\(|\bmonth\(|\bweekofyear\(|\bdayofweek\("
     r"|\bhour\(|\bwindow\(|time_window"
 )
@@ -331,13 +343,7 @@ def global_window_violations(df) -> list[str]:
             continue
         if not n.partitionSpec().isEmpty():
             continue
-        ch = n.children()
-        bounded, bad = True, []
-        for i in range(ch.size()):
-            ok, b = _bounded_below(ch.apply(i))
-            if not ok:
-                bounded, bad = False, b
-                break
+        bounded, bad = _bounded_below(n)  # i.e. are all its inputs bounded
         if not bounded:
             detail = f" (data-scale grouping keys: {bad})" if bad else ""
             out.append(
@@ -349,25 +355,12 @@ def global_window_violations(df) -> list[str]:
 
 
 def _iter_jnodes(jnode):
-    """Walk a JVM physical-plan tree, descending through the adaptive
-    wrapper, query stages, and reused exchanges."""
+    """Walk a JVM physical-plan tree along :func:`_direct_children`."""
     stack = [jnode]
     while stack:
         n = stack.pop()
         yield n
-        cname = n.getClass().getSimpleName()
-        if cname == "AdaptiveSparkPlanExec":
-            stack.append(n.executedPlan())
-            continue
-        if cname.endswith("QueryStageExec"):
-            stack.append(n.plan())
-            continue
-        if cname == "ReusedExchangeExec":
-            stack.append(n.child())
-            continue
-        ch = n.children()
-        for i in range(ch.size()):
-            stack.append(ch.apply(i))
+        stack.extend(_direct_children(n))
 
 
 def bnlj_build_rows(df) -> list[int | None]:
@@ -396,60 +389,176 @@ def bnlj_build_rows(df) -> list[int | None]:
     return out
 
 
-def audit(spark, sf: str = "/root/testdata/sf0.001") -> list[str]:
-    """Return failure strings for every registry query whose physical plan
-    has a CartesianProduct, an unwhitelisted BroadcastNestedLoopJoin, or a
-    whitelisted BNLJ whose executed build side exceeds its documented
-    bound.  Shared by the CLI below and
-    `tests/test_plans.py::test_plan_audit_green` so a red audit cannot be
-    committed (round-3 verdict item 2; bound check round-6 item 4)."""
-    from map_reduce485_spark.queries._util import release_scoped_caches
-
+def _sweep(spark, names, sf_dir, check):
+    """Yield ``(name, check(name, df), None)`` per named registry query, or
+    ``(name, None, exc)`` when building or checking it raises.  Each
+    query's scoped storage is released before the next is built."""
     _load_all()
-    bad = []
-    for name, spec in REGISTRY.items():
+    for name in names:
+        out, err = None, None
         try:
-            df = spec.fn(spark, sf)
-            txt = explain_str(df, "simple")
-            if name not in KNOWN_GLOBAL_WINDOW:
-                for v in global_window_violations(df):
-                    bad.append(f"{name}: {v}")
-            if "CartesianProduct" in txt:
-                bad.append(f"{name}: CartesianProduct")
-            elif "BroadcastNestedLoopJoin" in txt:
-                if name not in KNOWN_BNLJ:
-                    bad.append(f"{name}: unexpected BroadcastNestedLoopJoin")
-                elif KNOWN_BNLJ[name] is not None:
-                    bound = KNOWN_BNLJ[name]
-                    rows = bnlj_build_rows(df)
-                    if not rows:
-                        # static explain showed a BNLJ but AQE replanned it
-                        # away at runtime (e.g. the build side turned out
-                        # empty/tiny and the join was eliminated or swapped)
-                        # — nothing left to bound, so this is a pass, not a
-                        # probe failure (round-7 advice)
-                        pass
-                    elif any(r is None for r in rows):
-                        bad.append(
-                            f"{name}: BNLJ present but build side exposes "
-                            f"no numOutputRows metric (got {rows}) — fix "
-                            f"the probe, do not skip"
-                        )
-                    elif max(rows) > bound:
-                        bad.append(
-                            f"{name}: BNLJ build side {max(rows)} rows "
-                            f"exceeds documented bound {bound}"
-                        )
-        except Exception as exc:
-            bad.append(f"{name}: plan error {exc!r:.80}")
+            out = check(name, REGISTRY[name].fn(spark, sf_dir))
+        except Exception as exc:  # one bad query must not end the sweep
+            err = exc
         finally:
             release_scoped_caches()
+        yield name, out, err
+
+
+def _audit_one(name: str, df) -> list[str]:
+    bad = []
+    txt = explain_str(df, "simple")
+    if name not in KNOWN_GLOBAL_WINDOW:
+        bad += [f"{name}: {v}" for v in global_window_violations(df)]
+    if "CartesianProduct" in txt:
+        bad.append(f"{name}: CartesianProduct")
+    elif "BroadcastNestedLoopJoin" in txt:
+        if name not in KNOWN_BNLJ:
+            bad.append(f"{name}: unexpected BroadcastNestedLoopJoin")
+        elif KNOWN_BNLJ[name] is not None:
+            bound = KNOWN_BNLJ[name]
+            # no rows: static explain showed a BNLJ that AQE replanned away
+            # at runtime (empty/tiny build side, join eliminated or swapped):
+            # nothing left to bound, a pass, not a probe failure
+            rows = bnlj_build_rows(df)
+            if any(r is None for r in rows):
+                bad.append(
+                    f"{name}: BNLJ present but build side exposes no numOutputRows "
+                    f"metric (got {rows}) — fix the probe, do not skip"
+                )
+            elif rows and max(rows) > bound:
+                bad.append(
+                    f"{name}: BNLJ build side {max(rows)} rows exceeds documented bound {bound}"
+                )
     return bad
 
 
-def main() -> int:
-    spark = get_spark("plan_audit")
-    bad = audit(spark)
+def audit(spark, sf: str = f"{_DATA}/sf0.001", names=None) -> list[str]:
+    """Failure strings of the audit over the registry (or ``names``).
+    Shared by the CLI and `tests/test_plans.py::test_plan_audit_green`, so
+    a red audit cannot be committed (round-3 verdict item 2)."""
+    _load_all()
+    bad = []
+    for name, found, err in _sweep(spark, names or list(REGISTRY), sf, _audit_one):
+        bad += found if err is None else [f"{name}: plan error {err!r:.80}"]
+    return bad
+
+
+def dump(spark, names, sf_dir: str, out_dir: Path, suffix: str) -> None:
+    """Write each query's formatted plan to ``out_dir/<name>_<suffix>.txt``
+    and print its Exchange/join/Python-node summary; a query that fails to
+    plan gets its error as the file body."""
+    out_dir.mkdir(parents=True, exist_ok=True)
+    for name, text, err in _sweep(
+        spark, names, sf_dir, lambda _, df: explain_str(df, "formatted")
+    ):
+        if err is not None:
+            text = f"ERROR building plan: {err!r}"
+        path = out_dir / f"{name}_{suffix}.txt"
+        path.write_text(text)
+        n_ex, joins, py = plan_shape(text)
+        print(f"{name}: Exchange={n_ex} joins={joins} python={py} -> {path.name}")
+
+
+def _stats_line(name: str, df) -> str:
+    txt = explain_str(df, "formatted")
+    n_ex, joins, py = plan_shape(txt)
+    single = "SinglePartition" in txt
+    top_k = "TakeOrderedAndProject" in txt
+    global_sort = not top_k and re.search(r"\bSort \[[^\]]*\], true", txt)
+    return (
+        f"{name}\tex={n_ex}\tjoins={','.join(joins) or '-'}\t"
+        f"py={','.join(py) or '-'}\tsinglePart={'Y' if single else 'N'}\t"
+        f"globalSort={'Y' if global_sort else 'N'}"
+    )
+
+
+def stats(spark, names, sf_dir: str) -> None:
+    """Print one plan-shape line per query as soon as it is planned."""
+    for name, line, err in _sweep(spark, names, sf_dir, _stats_line):
+        print(line if err is None else f"{name}\tERROR\t{err!r}"[:300], flush=True)
+
+
+_STATEFUL_OPS = (
+    "Aggregate", "SessionWindow", "Deduplicate", "FlatMapGroupsInPandasWithState", "Join"
+)
+# streaming/jobs.py's stream_<job> builders; a *_join takes two streams
+_STREAM_JOBS = (
+    "tumbling_counts", "sliding_counts", "sessionize", "dedup_exact", "user_running_totals",
+    "view_purchase_join", "view_purchase_left_join", "dedup_within_watermark",
+)
+
+
+def stream(spark, sf_dir: str, out_dir: Path) -> None:
+    """Write each streaming job's header and extended logical plan (state
+    width and watermark placement show there; physical planning happens per
+    micro-batch) to ``out_dir/streaming_<job>.txt``."""
+    from map_reduce485_spark.streaming import jobs as J
+
+    (events,) = T(spark, sf_dir, "events")
+    landing = land_parquet(events, sf_dir, "events")
+    read = partial(J.read_events_stream, spark, landing)
+    out_dir.mkdir(parents=True, exist_ok=True)
+    for name in _STREAM_JOBS:
+        try:
+            build = getattr(J, f"stream_{name}")
+            df = build(read(), read()) if name.endswith("_join") else build(read())
+            text = explain_str(df, "extended") + "\n"  # as df.explain() prints it
+            body = (
+                f"watermark_present: {'EventTimeWatermark' in text}\n"
+                f"stateful_ops: {[k for k in _STATEFUL_OPS if k in text]}\n"
+                f"output_schema: {df.schema.simpleString()}\n\n{text}"
+            )
+        except Exception as exc:
+            body = f"ERROR building plan: {exc!r}"
+        path = out_dir / f"streaming_{name}.txt"
+        path.write_text(body)
+        print(f"{name}: -> {path.name}")
+
+
+# mode → (default --sf-dir, default --tag, SPARK_GRAFT_CACHE_TABLES unless set)
+MODES: dict[str, tuple[str, str | None, str | None]] = {
+    "audit": (f"{_DATA}/sf0.001", None, None),
+    # plans must reflect the bench's state: real parquet scans, not cached tables
+    "dump": (os.environ.get("SPARK_GRAFT_SF_DIR", f"{_DATA}/sf0.1"), "r13", "0"),
+    "stats": (f"{_DATA}/sf0.001", None, "1"),  # sweep speed; shapes unchanged
+    "stream": (os.environ.get("SPARK_GRAFT_SF_DIR", f"{_DATA}/sf0.01"), "r14", "0"),
+}
+
+
+def main(argv: list[str] | None = None) -> int:
+    ap = argparse.ArgumentParser(
+        description=__doc__, formatter_class=argparse.RawDescriptionHelpFormatter
+    )
+    ap.add_argument("mode", nargs="?", default="audit", choices=MODES)
+    ap.add_argument("--names", default="", help="comma-separated queries (not for stream)")
+    ap.add_argument("--sf-dir", help="data dir (default: per mode, see above)")
+    ap.add_argument("--tag", help="dump/stream: write under plans/TAG (default r13/r14)")
+    ap.add_argument("--suffix", default="before", help="dump: plan file suffix")
+    args = ap.parse_args(argv)
+
+    sf_default, tag_default, cache_tables = MODES[args.mode]
+    sf_dir = args.sf_dir or sf_default
+    out_dir = _ROOT / "plans" / (args.tag or str(tag_default))
+    if cache_tables is not None:
+        os.environ.setdefault("SPARK_GRAFT_CACHE_TABLES", cache_tables)
+    spark = get_spark(f"plan_audit_{args.mode}")
+    if args.mode == "stream":
+        stream(spark, sf_dir, out_dir)
+        return 0
+
+    _load_all()
+    names = [n.strip() for n in args.names.split(",") if n.strip()]
+    if not names:
+        names = list(bench_queries() if args.mode == "dump" else REGISTRY)
+    if args.mode == "dump":
+        dump(spark, names, sf_dir, out_dir, args.suffix)
+        return 0
+    if args.mode == "stats":
+        stats(spark, names, sf_dir)
+        return 0
+
+    bad = audit(spark, sf_dir, names)
     if bad:
         print("PLAN AUDIT FAILURES:")
         for b in bad:
@@ -457,7 +566,7 @@ def main() -> int:
         return 1
     n_bounded = sum(1 for v in KNOWN_BNLJ.values() if v is not None)
     print(
-        f"plan audit OK: {len(REGISTRY)} queries, no cartesians, no "
+        f"plan audit OK: {len(names)} queries, no cartesians, no "
         f"unexpected BNLJ, {n_bounded} whitelisted BNLJ build sides "
         f"within documented bounds"
     )
