@@ -22,9 +22,27 @@ Everything here derives from public knowledge only: the Apache Spark /
 PySpark API and the reference repo's observable behavior.
 """
 
-from map_reduce485_spark.session import get_spark
-from map_reduce485_spark.catalog import TABLES, load_tables, register_views
+import importlib
 
-__all__ = ["get_spark", "TABLES", "load_tables", "register_views"]
+# Resolved on first use (PEP 562), so importing the package does not import
+# pyspark: the engine's worker entry (`daemon.py`) runs inside it and must
+# trim sys.path before pyspark is imported.
+_EXPORTS = {
+    "get_spark": "map_reduce485_spark.session",
+    "TABLES": "map_reduce485_spark.catalog",
+    "load_tables": "map_reduce485_spark.catalog",
+    "register_views": "map_reduce485_spark.catalog",
+}
+
+__all__ = list(_EXPORTS)
 
 __version__ = "0.1.0"
+
+
+def __getattr__(name: str):
+    module = _EXPORTS.get(name)
+    if module is None:
+        raise AttributeError(f"module {__name__!r} has no attribute {name!r}")
+    value = getattr(importlib.import_module(module), name)
+    globals()[name] = value
+    return value

@@ -89,9 +89,12 @@ def dispatch(queue, line: bytes | str) -> dict:
             n_map, n_red = int(msg.get("num_mappers", 2)), int(msg.get("num_reducers", 2))
         except (TypeError, ValueError):
             return {"error": "num_mappers and num_reducers must be integers"}
-        request = JobRequest(
-            **{k: msg[k] for k in _JOB_FIELDS}, num_mappers=n_map, num_reducers=n_red
-        )
+        try:
+            request = JobRequest(
+                **{k: msg[k] for k in _JOB_FIELDS}, num_mappers=n_map, num_reducers=n_red
+            )
+        except ValueError as exc:
+            return {"error": str(exc)}
         return {"job_id": queue.submit(request)}
     if mt == "job_status":
         try:

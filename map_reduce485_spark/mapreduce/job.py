@@ -125,6 +125,15 @@ class JobRequest:
     num_mappers: int = 2
     num_reducers: int = 2
 
+    def __post_init__(self) -> None:
+        # checked before run() clears the output dir: with no tasks the job
+        # would delete the old output and write only _SUCCESS
+        if self.num_mappers < 1 or self.num_reducers < 1:
+            raise ValueError(
+                f"num_mappers and num_reducers must be at least 1, got "
+                f"{self.num_mappers} and {self.num_reducers}"
+            )
+
 
 class MapReduceJob:
     """Run one MapReduce job with reference semantics on Spark.

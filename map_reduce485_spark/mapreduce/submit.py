@@ -30,19 +30,19 @@ def main(argv: list[str] | None = None) -> None:
     p.add_argument("--nmappers", type=int, default=2)
     p.add_argument("--nreducers", type=int, default=2)
     args = p.parse_args(argv)
-
-    spark = get_spark("mapreduce-submit")
-    run_job(
-        spark,
-        JobRequest(
+    try:
+        request = JobRequest(
             input_directory=args.input,
             output_directory=args.output,
             mapper_executable=args.mapper,
             reducer_executable=args.reducer,
             num_mappers=args.nmappers,
             num_reducers=args.nreducers,
-        ),
-    )
+        )
+    except ValueError as exc:
+        p.error(str(exc))
+
+    run_job(get_spark("mapreduce-submit"), request)
     print(f"job complete: {args.output}")
 
 

@@ -9,6 +9,10 @@ Local-mode knobs mirror what we would set on a real cluster:
 - Arrow enabled so any Pandas-UDF path is batch-vectorized, never per-row.
 - UTC session timezone so timestamp semantics are reproducible against the
   DuckDB oracle and across clusters.
+- Python workers start through :mod:`map_reduce485_spark.daemon`, which
+  keeps PySpark from re-reading Spark's zip and jar on every task; the
+  package's parent directory is on the workers' ``PYTHONPATH``, so they
+  import it from any working directory.
 """
 
 from __future__ import annotations
@@ -16,6 +20,10 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+
+# The directory holding the package, for the workers' PYTHONPATH.
+_ENGINE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _default_cpus() -> int:
@@ -82,9 +90,15 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         # bucketed tables (co-located joins) land here, not in the repo cwd
         .config("spark.sql.warehouse.dir", "/tmp/mr485_spark_warehouse")
+        .config("spark.python.daemon.module", "map_reduce485_spark.daemon")
     )
     if extra_conf:
         builder = builder.config(map=extra_conf)
+    pythonpath = (extra_conf or {}).get("spark.executorEnv.PYTHONPATH", "")
+    paths = [p for p in pythonpath.split(os.pathsep) if p]
+    if _ENGINE_ROOT not in paths:
+        paths.append(_ENGINE_ROOT)
+    builder = builder.config("spark.executorEnv.PYTHONPATH", os.pathsep.join(paths))
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     _TUNED[id(spark)] = spark

@@ -114,6 +114,12 @@ def test_dispatch_answers_bad_requests():
             b'{"message_type": "job_status", "job_id": 99}',
             b'{"message_type": "job_status"}',
             b'{"message_type": "new_manager_job", "input_directory": "in"}',
+            *(
+                b'{"message_type": "new_manager_job", "input_directory": "in", '
+                b'"output_directory": "out", "mapper_executable": "cat", '
+                b'"reducer_executable": "cat", ' + counts + b"}"
+                for counts in (b'"num_reducers": 0', b'"num_reducers": -1', b'"num_mappers": 0')
+            ),
             b'{"message_type": "no_such_verb"}',
         ]:
             reply = cluster.dispatch(queue, line)
@@ -125,6 +131,20 @@ def test_dispatch_answers_bad_requests():
         }
     finally:
         queue.shutdown()
+
+
+def test_submit_refuses_nonpositive_task_counts(tmp_path, capsys):
+    """The CLI fails through argparse, before a session starts or the old
+    output is touched."""
+    out = tmp_path / "out"
+    out.mkdir()
+    (out / "part-00000").write_text("old\n")
+    argv = ["--input", str(tmp_path), "--output", str(out), "--mapper", "cat", "--reducer", "cat"]
+    with pytest.raises(SystemExit) as exc:
+        submit.main(argv + ["--nreducers", "0"])
+    assert exc.value.code == 2
+    assert "at least 1" in capsys.readouterr().err
+    assert [p.name for p in out.iterdir()] == ["part-00000"]
 
 
 def test_wait_exits_on_error_reply(monkeypatch, capsys):

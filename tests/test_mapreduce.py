@@ -13,7 +13,7 @@ from pathlib import Path
 
 import pytest
 
-from map_reduce485_spark.mapreduce import JobRequest, MapReduceJob, md5_partition
+from map_reduce485_spark.mapreduce import JobRequest, MapReduceJob, md5_partition, run_job
 from map_reduce485_spark.mapreduce.job import extract_key
 from tests.conftest import run_python
 
@@ -210,6 +210,21 @@ def test_overwrite_semantics(spark, text_input, tmp_path):
     MapReduceJob(spark, JobRequest(str(text_input), str(out), wc_map, wc_reduce, 1, 1)).run()
     assert not (out / "stale.txt").exists()
     assert any(p.name.startswith("part-") for p in out.iterdir())
+
+
+@pytest.mark.parametrize("num_mappers, num_reducers", [(2, 0), (2, -1), (0, 2)])
+def test_nonpositive_task_count_keeps_old_output(text_input, tmp_path, num_mappers, num_reducers):
+    """A job with no map or no reduce tasks is refused before the output dir
+    is cleared, instead of replacing it with a bare _SUCCESS."""
+    out = tmp_path / "out"
+    out.mkdir()
+    (out / "part-00000").write_text("old\t1\n")
+    (out / "_SUCCESS").write_text("")
+    wc_map, wc_reduce = make_wc()
+    with pytest.raises(ValueError, match="at least 1"):
+        run_job(None, JobRequest(str(text_input), str(out), wc_map, wc_reduce, num_mappers, num_reducers))
+    assert sorted(p.name for p in out.iterdir()) == ["_SUCCESS", "part-00000"]
+    assert (out / "part-00000").read_text() == "old\t1\n"
 
 
 def test_overwrite_file_uri_twice(spark, text_input, tmp_path):

@@ -1,5 +1,6 @@
-"""tools/measure.py: the sinks agree on row counts and the JVM CPU clock
-is monotone and advances across a run."""
+"""tools/measure.py: the sinks agree on row counts, the JVM CPU clock is
+monotone and advances across a run, and a Python UDF's work shows in the
+Python-worker CPU."""
 
 from __future__ import annotations
 
@@ -24,5 +25,13 @@ def test_meter_sinks_and_cpu_clock(spark, tmp_path):
     assert collected.rows == written.rows > 0
     assert computed.rows is None
     for run in (collected, written, computed):
-        assert run.wall > 0 and run.cpu >= 0
+        assert run.wall > 0 and run.cpu >= 0 and run.py_cpu >= 0
     assert c1 > c0
+
+    def python_udf(spark, _sf_dir):
+        from pyspark.sql.functions import udf
+
+        work = udf(lambda i: sum(range(i % 1000)), "long")
+        return spark.range(20_000).select(work("id"))
+
+    assert meter.run(python_udf, SF_SMOKE, NOOP).py_cpu > 0

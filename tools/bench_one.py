@@ -60,9 +60,11 @@ def main() -> None:
         runs = [meter.run(spec.fn, args.sf_dir, target) for _ in range(args.runs)]
         meter.release()
         walls, cpus_ = [r.wall for r in runs], [r.cpu for r in runs]
+        py_cpus = [r.py_cpu for r in runs]
         print(
             f"{name}: wall best {min(walls):.3f}s all {[round(r, 3) for r in walls]} "
-            f"cpu best {min(cpus_):.2f}s all {[round(c, 2) for c in cpus_]}",
+            f"cpu best {min(cpus_):.2f}s all {[round(c, 2) for c in cpus_]} "
+            f"py_cpu best {min(py_cpus):.2f}s all {[round(c, 2) for c in py_cpus]}",
             flush=True,
         )
 

@@ -7,7 +7,10 @@ drift gate) and takes these pieces from one :class:`Meter`:
   queries, not JVM and codegen bring-up;
 - ``jvm_cpu``: the driver JVM's user+system CPU seconds from
   ``/proc/<pid>/stat`` (in local mode the executors are threads of that
-  JVM, so this counts the work done, not hypervisor luck);
+  JVM, so this counts the JVM's work, not hypervisor luck);
+- ``py_cpu``: the CPU seconds of the Python daemon and workers under that
+  JVM, from ``perfbench.proctree`` (the JVM clock never sees the work of a
+  Python UDF or a Layer-A callable);
 - ``run``: one timed build-and-execute of a query builder to a sink;
 - ``calibrate``: a fixed CPU-bound query whose time stamps box speed into
   an artifact, so a drift gate can divide machine state out;
@@ -25,6 +28,7 @@ import time
 from typing import Callable, NamedTuple
 
 from map_reduce485_spark.queries._util import release_scoped_caches
+from perfbench import proctree
 
 # Sinks for Meter.run; any other string is a directory for the parquet sink.
 NOOP = "noop"  # computation only: no driver collect, no file output
@@ -35,12 +39,14 @@ class Run(NamedTuple):
     wall: float  # seconds, building the DataFrame included
     cpu: float  # driver-JVM CPU seconds
     rows: int | None  # None for the noop sink
+    py_cpu: float  # Python-worker CPU seconds
 
 
 class Meter:
     def __init__(self, spark) -> None:
         self.spark = spark
-        self._stat = f"/proc/{int(spark._jvm.ProcessHandle.current().pid())}/stat"
+        self._pid = int(spark._jvm.ProcessHandle.current().pid())
+        self._stat = f"/proc/{self._pid}/stat"
         self._tick = os.sysconf("SC_CLK_TCK")
 
     def warm_up(self) -> None:
@@ -53,13 +59,16 @@ class Meter:
             parts = f.read().rsplit(")", 1)[1].split()
         return (int(parts[11]) + int(parts[12])) / self._tick
 
+    def py_cpu(self) -> float:
+        return proctree.usage(self._pid).py_cpu_s
+
     def run(self, fn: Callable, sf_dir: str, sink: str) -> Run:
         """Build ``fn(spark, sf_dir)`` and execute it to ``sink``.
 
         The parquet sink counts rows from the written files' metadata: it
         is for outputs that are distributed intermediates no real pipeline
         collects, and that at 10x exceed spark.driver.maxResultSize."""
-        c0, t0 = self.jvm_cpu(), time.perf_counter()
+        p0, c0, t0 = self.py_cpu(), self.jvm_cpu(), time.perf_counter()
         df = fn(self.spark, sf_dir)
         if sink == NOOP:
             df.write.format("noop").mode("overwrite").save()
@@ -69,7 +78,8 @@ class Meter:
         else:
             df.write.mode("overwrite").parquet(sink)
             rows = self.spark.read.parquet(sink).count()
-        return Run(time.perf_counter() - t0, self.jvm_cpu() - c0, rows)
+        wall, cpu = time.perf_counter() - t0, self.jvm_cpu() - c0
+        return Run(wall, cpu, rows, self.py_cpu() - p0)
 
     def calibrate(self) -> float:
         """Best-of-3 seconds of the calibration query, codegen pre-warmed."""

@@ -55,7 +55,7 @@ def main() -> int:
     for name in names:
         spec = REGISTRY[name]
         try:
-            t_spark, _, n = meter.run(spec.fn, args.sf, COLLECT)
+            run = meter.run(spec.fn, args.sf, COLLECT)
         except Exception as exc:
             print(f"ERROR {name}: {exc}", file=sys.stderr)
             rows.append((name, float("nan"), 0.0, -1))
@@ -67,9 +67,9 @@ def main() -> int:
             except Exception as exc:
                 print(f"ORACLE ERROR {name}: {exc}", file=sys.stderr)
         t_oracle = time.time() - t1
-        total_spark += t_spark
+        total_spark += run.wall
         total_oracle += t_oracle
-        rows.append((name, t_spark, t_oracle, n))
+        rows.append((name, run.wall, t_oracle, run.rows))
 
     rows.sort(key=lambda r: -(r[1] if r[1] == r[1] else 1e9))
     print(f"\n{'query':<40} {'spark_s':>8} {'duck_s':>7} {'rows':>7}")
